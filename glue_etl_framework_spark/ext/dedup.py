@@ -1,25 +1,19 @@
-"""Near-duplicate text dedup at scale: pyspark.ml MinHashLSH pipeline +
-cluster-pick, complementing the portable md5-minhash variant in
-queries/dedup.py.
+"""Near-duplicate text dedup at scale: parameterized banded emitters
+(MinHash, SimHash) with the bounded-output levers, plus cluster-pick over
+the pair graph. minhash_banded_candidate_pairs is the same construction as
+the oracle-checked registry entry dedup_minhash_lsh in queries/dedup.py.
 
-100 TB shape: shingle -> HashingTF sparse vectors -> MinHashLSH
-approxSimilarityJoin (band-bucketed join, never all-pairs) -> greedy
-cluster representative pick via iterative min-id propagation (a bounded
-number of self-joins, each a shuffle on doc_id — no driver-side graph).
+100 TB shape: shingle -> md5 string-min signatures -> band equi-join
+(never all-pairs) -> cluster representative pick via iterative min-id
+propagation (a bounded number of self-joins, each a shuffle on doc_id — no
+driver-side graph), with a two-phase star-contraction fallback when the
+graph's diameter exceeds the round budget.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # pyspark.ml is bundled with pyspark; guard anyway for slim builds
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    HAS_ML = True
-except ImportError:  # pragma: no cover
-    HAS_ML = False
-
 
 def shingle_tokens(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Add a ``shingles`` array column of word n-grams (distinct). One regex
@@ -31,53 +25,6 @@ def shingle_tokens(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
         rf"regexp_extract_all({text_col}, '(?<=^| )(?=((\\S+ ){{{n - 1}}}\\S+))', 1)"
     )
     return df.withColumn("shingles", F.array_distinct(sh)).filter(F.size("shingles") > 0)
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    seed: int = 42,
-) -> DataFrame:
-    """(id_a, id_b, jaccard_distance) candidate pairs with estimated
-    Jaccard distance STRICTLY < 1 - threshold, via
-    MinHashLSH.approxSimilarityJoin — Spark's LSHModel filters
-    ``distCol < threshold`` (exclusive), so a pair at exactly the
-    boundary distance is NOT emitted (r15 review; the banded emitters
-    below use inclusive >= on similarity and are the production path).
-    The join only compares same-band rows — linear in corpus size for fixed
-    collision rates.
-
-    CONVENIENCE PATH ONLY (VERDICT r12 item 5): the band self-join happens
-    inside pyspark.ml's approxSimilarityJoin, so this variant CANNOT take
-    the bounded-output levers (max_bucket_size / top_k_partners / metrics)
-    — on a corpus with quadratic true-pair density its output, like any
-    uncapped emitter's, is unbounded. At scale use
-    minhash_banded_candidate_pairs below: identical banding semantics,
-    full bounded-output contract, and bit-compatible with the
-    oracle-attested registry entry."""
-    if not HAS_ML:  # pragma: no cover
-        raise NotImplementedError("pyspark.ml not available")
-    shingled = shingle_tokens(df.select(id_col, text_col), text_col)
-    tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=num_features)
-    feats = tf.transform(shingled)
-    # MinHashLSH requires at least one non-zero entry; HashingTF of a
-    # non-empty shingle array always qualifies.
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, 1.0 - jaccard_threshold, distCol="jaccard_distance")
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            "jaccard_distance",
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
 
 
 def minhash_banded_candidate_pairs(
@@ -135,7 +82,6 @@ def connected_component_labels(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-    on_exhaustion: str = "fallback",
     metrics: dict | None = None,
     a_col: str = "id_a",
     b_col: str = "id_b",
@@ -153,20 +99,13 @@ def connected_component_labels(
     early convergence still exits in O(actual rounds) while chain-shaped
     graphs converge instead of truncating.
 
-    ``on_exhaustion`` decides what happens when the round budget runs out
-    WITHOUT convergence (labels would then not be final component minima —
-    silently wrong components, the r11 twelfth-probe failure mode):
-
-    - ``"fallback"`` (default): warn, then recompute via
-      connected_component_labels_twophase — O(log^2 n) rounds regardless
-      of graph diameter, so the returned labels are always final. The
-      warning survives so callers learn their graph shape defeats
-      propagation (two-phase was also measured FASTER once diameter bites:
-      7.3 s vs 12.3 s at 10x — probes/cc_twophase_compare_r11.txt).
-    - ``"raise"``: RuntimeError — for pipelines that must not absorb the
-      two-phase recompute cost implicitly.
-    - ``"warn"``: return the non-final labels with only the warning — the
-      pre-r12 behavior, opt-in only.
+    When the round budget runs out WITHOUT convergence (labels would then
+    not be final component minima — silently wrong components), it warns,
+    then recomputes via connected_component_labels_twophase — O(log^2 n)
+    rounds regardless of graph diameter, so the returned labels are always
+    final. The warning survives so callers learn their graph shape defeats
+    propagation (two-phase was also measured FASTER once diameter bites:
+    7.3 s vs 12.3 s at 10x — probes/cc_twophase_compare_r11.txt).
 
     A run that converges within the budget never warns, never falls back,
     and builds the identical plan it always did (the oracle-attested
@@ -177,10 +116,6 @@ def connected_component_labels(
     (VERDICT r13 item 3). These are driver-side loop counters the
     algorithm already pays for: recording them adds ZERO Spark jobs and
     leaves the plan untouched."""
-    if on_exhaustion not in ("fallback", "raise", "warn"):
-        raise ValueError(
-            f"on_exhaustion must be 'fallback', 'raise', or 'warn', got {on_exhaustion!r}"
-        )
     # Materialize the edge list ONCE: its lineage (often a full MinHash/LSH
     # candidate pipeline) would otherwise re-execute inside EVERY round's
     # join — measured 5x end-to-end on the minhash graph at sf0.1.
@@ -255,53 +190,45 @@ def connected_component_labels(
     if metrics is not None:
         metrics["cc_rounds"] = rounds
         metrics["cc_converged"] = converged
-        metrics["cc_fallback"] = not converged and on_exhaustion == "fallback"
+        metrics["cc_fallback"] = not converged
     if not converged:
         # Propagation needs O(component diameter) rounds; exhausting the
         # budget means some labels are NOT yet the component minimum —
-        # returning them silently would hand the caller wrong components
-        # (r11). Warn loudly; then fall back or raise per on_exhaustion —
-        # warned-but-wrong output is opt-in only (r12).
+        # returning them would hand the caller wrong components. Warn
+        # loudly, then fall back to two-phase.
         import warnings
 
-        resolution = {
-            "fallback": "falling back to connected_component_labels_twophase "
-            "(O(log^2 n) rounds regardless of diameter; it warns separately "
-            "if its own round budget were ever to run out)",
-            "raise": "raising",
-            "warn": "returning them anyway (on_exhaustion='warn')",
-        }[on_exhaustion]
-        msg = (
+        warnings.warn(
             f"connected_component_labels exhausted max_iterations="
             f"{max_iterations} before converging — propagation's labels are "
             f"NOT final component minima (the graph's diameter exceeds the "
-            f"round budget); {resolution}."
+            f"round budget); falling back to connected_component_labels_twophase "
+            f"(O(log^2 n) rounds regardless of diameter; it warns separately "
+            f"if its own round budget were ever to run out).",
+            UserWarning,
+            stacklevel=2,
         )
-        if on_exhaustion == "raise":
-            raise RuntimeError(msg)
-        warnings.warn(msg, UserWarning, stacklevel=2)
-        if on_exhaustion == "fallback":
-            # Hand twophase the already-materialized edge set, NOT the raw
-            # pairs frame: pairs' lineage is often a full MinHash/LSH
-            # candidate pipeline (re-executing it measured 5x end-to-end,
-            # see the edges checkpoint above), and edges is equivalent
-            # input — twophase canonicalizes/distincts its edges anyway.
-            # SEED it with the partially-propagated labels as extra edges
-            # (ADVICE r12): label(n) is the min id reached from n along
-            # real edges, so (n, label(n)) connects nodes already in one
-            # component — the component partition is unchanged, but star
-            # contraction starts from a graph the exhausted rounds already
-            # partially collapsed (long chains become shortcuts to the
-            # frontier minimum) instead of discarding that work entirely.
-            label_edges = labels.filter(F.col("node") != F.col("label")).select(
-                F.col("node").alias("id_a"), F.col("label").alias("id_b")
-            )
-            return connected_component_labels_twophase(
-                nodes,
-                edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
-                .union(label_edges),
-                id_col,
-            )
+        # Hand twophase the already-materialized edge set, NOT the raw
+        # pairs frame: pairs' lineage is often a full MinHash/LSH
+        # candidate pipeline (re-executing it measured 5x end-to-end,
+        # see the edges checkpoint above), and edges is equivalent
+        # input — twophase canonicalizes/distincts its edges anyway.
+        # SEED it with the partially-propagated labels as extra edges:
+        # label(n) is the min id reached from n along real edges, so
+        # (n, label(n)) connects nodes already in one component — the
+        # component partition is unchanged, but star contraction starts
+        # from a graph the exhausted rounds already partially collapsed
+        # (long chains become shortcuts to the frontier minimum) instead
+        # of discarding that work entirely.
+        label_edges = labels.filter(F.col("node") != F.col("label")).select(
+            F.col("node").alias("id_a"), F.col("label").alias("id_b")
+        )
+        return connected_component_labels_twophase(
+            nodes,
+            edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+            .union(label_edges),
+            id_col,
+        )
     all_nodes = nodes.select(F.col(id_col).alias("node")).distinct()
     return all_nodes.join(labels, "node", "left").select(
         "node", F.coalesce("label", F.col("node")).alias("label")
@@ -313,20 +240,17 @@ def dedup_keep_representative(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-    on_exhaustion: str = "fallback",
     metrics: dict | None = None,
     a_col: str = "id_a",
     b_col: str = "id_b",
 ) -> DataFrame:
     """Drop near-duplicates, keeping one representative (min id) per
     connected component of the pair graph (see
-    connected_component_labels; on_exhaustion and metrics pass through,
-    so the default can never drop documents based on non-final labels
-    and a funnel audit reads the CC round count from the same dict the
-    emitter levers wrote their dropped mass into)."""
+    connected_component_labels, which never returns non-final labels;
+    metrics passes through, so a funnel audit reads the CC round count
+    from the same dict the emitter levers wrote their dropped mass into)."""
     labels = connected_component_labels(
-        df, pairs, id_col, max_iterations, on_exhaustion, metrics=metrics,
-        a_col=a_col, b_col=b_col,
+        df, pairs, id_col, max_iterations, metrics=metrics, a_col=a_col, b_col=b_col
     )
     keep = labels.filter(F.col("node") == F.col("label")).select(F.col("node").alias(id_col))
     return df.join(keep, id_col, "left_semi")
@@ -1025,9 +949,8 @@ def estimate_lost_hyperplane_pairs(
     the CI caveat are exactly the shared core's — see
     estimate_lost_simhash_pairs."""
     from glue_etl_framework_spark.ext.similarity import (
-        assert_vector_dim,
         banded_signatures,
-        quantize_embeddings,
+        quantize_checked,
         quantized_cosine_joined,
         scaled_band_bits,
     )
@@ -1035,10 +958,8 @@ def estimate_lost_hyperplane_pairs(
     if band_bits is None:
         n = n_rows if n_rows is not None else df.count()
         band_bits = scaled_band_bits(n)
-    v = quantize_embeddings(df, id_col, vec_col).localCheckpoint(eager=True)
-    # Near-free aggregate on the checkpoint; same silent-collapse guard
-    # as the emitter (r15 review).
-    assert_vector_dim(v, "q", dim)
+    # Same quantization and silent-collapse dim guard as the emitter.
+    v = quantize_checked(df, dim, id_col, vec_col)
     # The banding projection (n_bands * band_bits hyperplane dot products
     # per row) feeds the core's bucket counts, member join, and BOTH sides
     # of the agree join — materialize it once, as the emitter itself does.

@@ -1,387 +1,47 @@
-"""Approximate nearest-neighbor search over embedding columns at scale.
+"""Similarity search over quantized embeddings — the one implementation
+of each algorithm the registry entries in queries/similarity.py and
+queries/llmops.py call, so the DuckDB oracle certifies the functions users
+call.
 
-Two paths on top of the exact baseline in queries/similarity.py:
+Everything works on the quantized (vec_id, q, nq) frame that
+quantize_embeddings builds: each float dimension is scaled by 2^20 and
+rounded to BIGINT, so dot products and squared norms are exact integer
+sums and every cosine is a deterministic double on any partitioning.
 
-1. Hyperplane-LSH bucketing (pure column expressions): deterministic random
-   hyperplanes derived from md5 bits; vectors sharing a signature bucket are
-   candidates. Works on array<float> directly, no ml Vector conversion,
-   whole plan stays in codegen.
-2. pyspark.ml BucketedRandomProjectionLSH (euclidean) for
-   approxNearestNeighbors / approxSimilarityJoin.
+- quantized_cosine / quantized_cosine_joined: the exact cosine column and
+  the candidate-pair verify join.
+- exact_topk: broadcast queries x corpus scan with a per-query top-k.
+- coarse_cells / ivf_topk: the IVF index — a fixed-size centroid sample,
+  nearest-cell assignment, per-query probe lists, and top-k over the
+  probed cells only.
+- banded_signatures / lsh_neardup_pairs: banded random-hyperplane LSH
+  near-duplicate pairs with a parameterized banding shape, so signature
+  bits can grow with the corpus and candidate volume stays linear.
 
-100 TB shape: both replace the corpus x corpus product with an equi-join on
-bucket id; recall is tuned by (n_planes, n_tables) and verified against the
-exact baseline in tests/.
+100 TB shape: every search replaces the corpus x corpus product with a
+broadcast of a bounded side (queries, centroids, probe lists) or an
+equi-join on a bucket key; recall against exact_topk is tested in tests/.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.errors import PySparkException
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-try:
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
+from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
-    HAS_ML = True
-except ImportError:  # pragma: no cover
-    HAS_ML = False
-
-
-def _hyperplane(dim: int, plane: int, table: int) -> list[float]:
-    """Deterministic pseudo-random unit-ish hyperplane: component sign/value
-    from md5 — reproducible everywhere, no RNG state."""
-    import hashlib
-
-    comps = []
-    for d in range(dim):
-        h = hashlib.md5(f"{table}:{plane}:{d}".encode()).digest()
-        # map first 4 bytes to [-1, 1)
-        v = int.from_bytes(h[:4], "big") / 2**31 - 1.0
-        comps.append(v)
-    norm = math.sqrt(sum(c * c for c in comps)) or 1.0
-    return [c / norm for c in comps]
-
-
-def assert_vector_dim(df: DataFrame, vec_col: str, dim: int) -> None:
-    """One cheap (min, max array-size) aggregate: raise a clear error if
-    any vector's length differs from ``dim``. Without it a dim mismatch
-    silently ZEROES every hyperplane projection (zip_with pads with
-    nulls, null products null the aggregate, `when(proj > 0)` maps the
-    null to bit 0), collapsing all vectors into one LSH bucket and
-    turning the candidate self-join into the full O(n^2) cross product
-    with bit-correct results — invisible until the shuffle dies at scale
-    (r15 review). Called by the API entry points that take a ``dim``
-    parameter; costs one scan-shaped job, negligible next to the silent
-    failure it prevents."""
-    row = df.agg(
-        F.min(F.size(F.col(vec_col))).alias("lo"),
-        F.max(F.size(F.col(vec_col))).alias("hi"),
-    ).first()
-    if row["lo"] is not None and (row["lo"] != dim or row["hi"] != dim):
-        raise ValueError(
-            f"{vec_col} vectors have length in [{row['lo']}, {row['hi']}] "
-            f"but dim={dim} was configured — a mismatch would silently "
-            "zero every LSH signature (one bucket, O(n^2) candidates); "
-            "pass the actual embedding dimensionality"
-        )
-
-
-def float_array_sql(vals: list[float]) -> str:
-    """Spark-SQL text of an array<double> literal whose elements are
-    EXACTLY the given Python floats. ``repr(float)`` emits the shortest
-    decimal that round-trips to the same IEEE-754 double, and Spark's
-    decimal/scientific literal -> DOUBLE conversion is correctly rounded,
-    so ``CAST(<repr> AS DOUBLE)`` reconstructs the identical bits (pinned
-    value- and bit-exact by tests/test_r16_optimizations.py). Used by the
-    float-plane signature builder below — the r15 band_value_sql treatment
-    (one F.expr parse instead of dim x planes py4j F.lit round trips)
-    extended to non-integer components (VERDICT r15 item 5)."""
-    return "array(" + ",".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vals) + ")"
-
-
-def table_sig_sql(table: int, dim: int, n_planes: int, vec_col: str) -> str:
-    """Spark-SQL text of hyperplane table ``table``'s signature value over
-    a float-array column — semantically identical to the unrolled Column
-    build it replaced in hyperplane_signatures (same zip_with/aggregate/
-    CASE tree after parsing; the reference construction is kept in
-    tests/test_r16_optimizations.py and pinned value- and dtype-equal)."""
-    ident = vec_col.replace("`", "``")
-    bits = []
-    for p in range(n_planes):
-        arr = float_array_sql(_hyperplane(dim, p, table))
-        dot = (
-            f"aggregate(zip_with(`{ident}`, {arr}, "
-            f"(x, c) -> CAST(x AS DOUBLE) * c), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        bits.append(
-            f"(CASE WHEN {dot} > 0.0 THEN CAST({1 << p} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-        )
-    return " + ".join(bits)
-
-
-def hyperplane_signatures(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 12,
-    n_tables: int = 3,
-) -> DataFrame:
-    """Add ``sig_0..sig_{n_tables-1}`` integer bucket columns: bit p of
-    sig_t = sign(v . hyperplane(t, p)). Cosine-similar vectors collide with
-    probability (1 - theta/pi)^n_planes per table.
-
-    Contract: every vector must have exactly ``dim`` components — the
-    plan-pure construction cannot check this itself (r15 review: a
-    mismatch nulls the zip_with products and would silently zero every
-    signature); API entry points validate via assert_vector_dim.
-
-    r16 (guide §1.2 step 2, the band_value_sql treatment): each table's
-    signature parses as ONE SQL string. The previous unrolled build made
-    dim x n_planes x n_tables F.lit py4j round trips (64x12x3 ≈ 2.3k) per
-    call — ~0.9 s of driver-side plan construction; the SQL text builds in
-    ~1 ms and parses to the same expression tree, so execution is
-    untouched (float literals reconstruct bit-exactly, see
-    float_array_sql)."""
-    if not 1 <= n_planes <= 63:
-        raise ValueError(
-            "n_planes must be in [1, 63] (bit 63 would overflow LongType "
-            "— ADVICE r11, same bound as banded_signatures band_bits)"
-        )
-    out = df
-    for t in range(n_tables):
-        out = out.withColumn(
-            f"sig_{t}", F.expr(table_sig_sql(t, dim, n_planes, vec_col))
-        )
-    return out
-
-
-def ann_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 10,
-    n_tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k neighbors: equi-join queries to corpus on any
-    matching LSH table signature, score exact cosine only on candidates,
-    keep best k per query. Returns (query_id, neighbor_id, cosine).
-    Validates vector length against ``dim`` up front (one cheap job per
-    side — r15 review: a mismatch would silently collapse every vector
-    into one bucket); norms are computed once per vector, not per
-    candidate pair, and candidate dedup keys on the id pair only."""
-    assert_vector_dim(corpus, vec_col, dim)
-    assert_vector_dim(queries, vec_col, dim)
-    csig = hyperplane_signatures(with_norm(corpus, vec_col), vec_col, dim, n_planes, n_tables)
-    qsig = hyperplane_signatures(with_norm(queries, vec_col), vec_col, dim, n_planes, n_tables)
-    c_long = _melt_sigs(csig, id_col, vec_col, n_tables).withColumnRenamed(id_col, "neighbor_id")
-    q_long = _melt_sigs(qsig, id_col, vec_col, n_tables).withColumnRenamed(id_col, "query_id")
-    cand = (
-        q_long.withColumnRenamed(vec_col, "qv").withColumnRenamed("sqnorm", "q_sqnorm")
-        .join(
-            c_long.withColumnRenamed(vec_col, "cv").withColumnRenamed("sqnorm", "n_sqnorm"),
-            ["table", "sig"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qv", "q_sqnorm", "cv", "n_sqnorm")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    cos = _cos(F.col("qv"), F.col("q_sqnorm"), F.col("cv"), F.col("n_sqnorm"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def _melt_sigs(df: DataFrame, id_col: str, vec_col: str, n_tables: int) -> DataFrame:
-    pairs = F.array(
-        *[
-            F.struct(F.lit(t).alias("table"), F.col(f"sig_{t}").alias("sig"))
-            for t in range(n_tables)
-        ]
-    )
-    carry = [c for c in (id_col, vec_col, "sqnorm") if c in df.columns]
-    return df.select(*carry, F.explode(pairs).alias("ts")).select(
-        *carry, F.col("ts.table").alias("table"), F.col("ts.sig").alias("sig")
-    )
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k (broadcast queries x corpus scan) — the recall
-    baseline; same shape as queries/similarity.py but reusable on any
-    DataFrame."""
-    q = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-    )
-    c = with_norm(corpus.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        F.col("sqnorm").alias("n_sqnorm"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    cos = _cos(F.col("qv"), F.col("q_sqnorm"), F.col("cv"), F.col("n_sqnorm"))
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def brp_lsh_similarity_join(
-    df: DataFrame,
-    distance_threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Euclidean near-pairs via pyspark.ml BucketedRandomProjectionLSH
-    approxSimilarityJoin: (id_a, id_b, euclidean_distance)."""
-    if not HAS_ML:  # pragma: no cover
-        raise NotImplementedError("pyspark.ml not available")
-    vecs = df.select(id_col, array_to_vector(F.col(vec_col)).alias("features"))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes",
-        bucketLength=bucket_length, numHashTables=num_hash_tables, seed=seed,
-    )
-    model = lsh.fit(vecs)
-    joined = model.approxSimilarityJoin(vecs, vecs, distance_threshold, distCol="euclidean_distance")
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            "euclidean_distance",
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-
-
-# ---------------------------------------------------------------- IVF ----
-# Inverted-file ANN: the third scale path (coarse-quantize -> probe nearest
-# lists). queries/similarity.similarity_ann_ivf is the oracle-checked fixed
-# pipeline; these are the reusable library pieces.
-
-
-def _cos(qa, na, qb, nb):
-    dot = F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Add ``sqnorm`` (squared L2 norm, double) for reuse across scoring."""
-    nq = F.aggregate(
-        F.transform(F.col(vec_col), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return df.withColumn("sqnorm", nq)
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 1,
-) -> DataFrame:
-    """Assign every corpus vector to its ``n_probe`` nearest centroids by
-    cosine (ties to the lowest centroid id). ``centroids`` must have
-    (cid, cvec) and be small enough to broadcast — the IVF contract (K ~
-    sqrt(corpus) even at 100 TB broadcasts fine). Returns (id, cid, rank).
-    One broadcast join + one window; no shuffle of the vectors beyond the
-    window's key partitioning."""
-    if n_probe < 1:
-        raise ValueError(
-            "n_probe must be >= 1 (r15 review: 0 silently assigned "
-            "nothing instead of raising like every sibling knob)"
-        )
-    c = with_norm(centroids.select("cid", F.col("cvec")), "cvec").withColumnRenamed(
-        "sqnorm", "c_sqnorm"
-    )
-    v = with_norm(corpus.select(id_col, vec_col), vec_col)
-    cos = _cos(F.col(vec_col), F.col("sqnorm"), F.col("cvec"), F.col("c_sqnorm"))
-    scored = v.join(F.broadcast(c), how="cross").select(id_col, "cid", cos.alias("cos"))
-    if n_probe == 1:
-        # Fast path for the bulk corpus assignment: max_by over (cos, -cid)
-        # partially aggregates map-side, so the shuffle carries one row per
-        # vector instead of all n x K scored rows (the window formulation
-        # shuffles + sorts everything). Same winner: cos desc, ties to
-        # lowest cid.
-        return (
-            scored.groupBy(id_col)
-            .agg(F.max_by("cid", F.struct(F.col("cos"), (-F.col("cid")).alias("nc"))).alias("cid"))
-            .select(id_col, "cid", F.lit(1).alias("rank"))
-        )
-    w = W.partitionBy(id_col).orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_probe)
-        .select(id_col, "cid", "rank")
-    )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN search: corpus vectors live in their nearest-centroid list
-    (n_probe=1 assignment); each query scores only the lists of its
-    ``n_probe`` nearest centroids. Returns (query_id, neighbor_id, cosine)
-    with up to ``k`` rows per query (fewer when the probed lists hold
-    fewer than k other vectors). The probe-to-list candidate join is
-    BROADCAST (probes are n_probe rows per query); the non-broadcast
-    shuffles are ivf_assign's per-vector aggregate, the corpus-side join
-    keyed on neighbor_id, and the ranking window (r15 review — the old
-    text pointed capacity planning at the wrong join). Pairs scored
-    shrink by ~K/n_probe vs brute force."""
-    corpus_lists = ivf_assign(corpus, centroids, id_col, vec_col, n_probe=1).select(
-        F.col(id_col).alias("neighbor_id"), "cid"
-    )
-    probes = ivf_assign(queries, centroids, id_col, vec_col, n_probe=n_probe).select(
-        F.col(id_col).alias("query_id"), "cid"
-    )
-    qv = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("sqnorm").alias("q_sqnorm"),
-    )
-    nv = with_norm(corpus.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        F.col("sqnorm").alias("n_sqnorm"),
-    )
-    cos = _cos(F.col("q_vec"), F.col("q_sqnorm"), F.col("n_vec"), F.col("n_sqnorm"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        F.broadcast(probes)
-        .join(corpus_lists, "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
+_DIM_MISMATCH = "embedding vector length mismatch"
 
 # ------------------------------------------- banded hyperplane LSH ----
-# Parameterized production path for embedding near-dup PAIR emitters
-# (VERDICT r10 item 1). The registry entry
-# queries/similarity.similarity_lsh_hyperplane_pairs pins the banding
-# constants (2 bands x 8 bits) because its DuckDB oracle must reproduce
-# them bit-for-bit; the r10 ninth scale probe showed what that costs at
+# Parameterized production path for embedding near-dup PAIR emitters.
+# The registry entry queries/similarity.similarity_lsh_hyperplane_pairs
+# calls lsh_neardup_pairs at fixed banding constants (2 bands x 8 bits)
+# because its DuckDB oracle must reproduce them bit-for-bit; the r10 ninth
+# scale probe showed what that fixed shape costs at
 # volume: with a FIXED bucket count (2 x 256), bucket occupancy grows
 # linearly with the corpus, so in-bucket candidate pairs grow ~n^2
 # (measured: 10,183x output at 100x volume). These builders take the
@@ -450,6 +110,41 @@ def quantize_embeddings(
         lambda acc, x: acc + x,
     )
     return out.select("vec_id", "q", nq.alias("nq"))
+
+
+def quantize_checked(
+    df: DataFrame, dim: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """quantize_embeddings materialized once as a DATA_SIZED checkpoint
+    (the LSH emitters read it from the signatures and both verify-join
+    sides), with every vector's length checked against ``dim`` inside the
+    checkpoint's own job — a per-row size test, no extra pass. Without
+    the check a dim mismatch silently ZEROES every hyperplane projection
+    (zip_with pads with nulls, null products null the aggregate,
+    `when(proj > 0)` maps the null to bit 0), collapsing all vectors into
+    one LSH bucket and turning the candidate self-join into the full
+    O(n^2) cross product with bit-correct results — invisible until the
+    shuffle dies at scale. Raises ValueError naming the first mismatched
+    length it meets."""
+    size = F.size(F.col(vec_col))
+    guard = F.raise_error(
+        F.format_string(
+            f"{_DIM_MISMATCH}: {vec_col} has length %d but dim={dim} was "
+            "configured — a mismatch would silently zero every LSH signature "
+            "(one bucket, O(n^2) candidates); pass the actual embedding "
+            "dimensionality",
+            size,
+        )
+    )
+    checked = df.withColumn(vec_col, F.when(size != dim, guard).otherwise(F.col(vec_col)))
+    try:
+        return checkpoint_shared(
+            quantize_embeddings(checked, id_col, vec_col), size_class=DATA_SIZED
+        )
+    except PySparkException as e:
+        if _DIM_MISMATCH not in str(e):
+            raise
+        raise ValueError(e.getMessageParameters().get("errorMessage", str(e))) from None
 
 
 def banded_signatures(
@@ -528,6 +223,23 @@ def auto_bucket_cap(n_rows: int, band_bits: int, factor: int = 8) -> int:
     return factor * math.ceil(n_rows / (1 << band_bits))
 
 
+def quantized_cosine(
+    qa: str = "qa", na: str = "na", qb: str = "qb", nb: str = "nb"
+) -> Column:
+    """Exact cosine of two quantized vectors held in columns ``qa``/``qb``
+    (BIGINT arrays) with squared norms ``na``/``nb``: an order-independent
+    integer dot product over one sqrt-normalize, so the double result is
+    bit-identical in Spark and DuckDB on any partitioning. The single
+    cosine expression every registry entry and library function scores
+    with."""
+    dot = F.aggregate(
+        F.zip_with(F.col(qa), F.col(qb), lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return dot / (F.sqrt(F.col(na).cast("double")) * F.sqrt(F.col(nb).cast("double")))
+
+
 def quantized_cosine_joined(
     v: DataFrame, cand: DataFrame, a_col: str = "vec_a", b_col: str = "vec_b"
 ) -> DataFrame:
@@ -536,17 +248,12 @@ def quantized_cosine_joined(
     shared by the emitter (lsh_neardup_pairs) and its auditor
     (ext.dedup.estimate_lost_hyperplane_pairs). The audit's validity
     rests on verifying with bit-identical semantics to the emitter it
-    prices; sharing removes the silent-divergence risk a copy carries
-    (r15 review — same class as ext.dedup._simhash_hamming_joined)."""
+    prices; sharing removes the silent-divergence risk a copy carries."""
     x = v.select(F.col("vec_id").alias(a_col), F.col("q").alias("qa"), F.col("nq").alias("na"))
     y = v.select(F.col("vec_id").alias(b_col), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x_: acc + x_,
+    return cand.join(x, a_col).join(y, b_col).select(
+        a_col, b_col, quantized_cosine().alias("cosine")
     )
-    cosine = dot / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
-    return cand.join(x, a_col).join(y, b_col).select(a_col, b_col, cosine.alias("cosine"))
 
 
 def lsh_neardup_pairs(
@@ -564,12 +271,13 @@ def lsh_neardup_pairs(
     cap_metrics: dict | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (vec_a, vec_b, cosine >= threshold)
-    via banded random-hyperplane LSH with a PARAMETERIZED banding shape —
-    the production form of the registry entry
-    similarity_lsh_hyperplane_pairs (which pins n_bands=2, band_bits=8 for
-    its oracle). band_bits=None sizes the bands from the corpus:
-    scaled_band_bits(n_rows or df.count()) — pass n_rows when the count is
-    already known to avoid the extra scan. Candidates come from ONE
+    via banded random-hyperplane LSH with a PARAMETERIZED banding shape.
+    The registry entry similarity_lsh_hyperplane_pairs is this function
+    pinned at threshold=0.35, n_bands=2, band_bits=8 for its oracle, so
+    the oracle certifies the production path itself. band_bits=None
+    sizes the bands from the corpus: scaled_band_bits(n_rows or
+    df.count()) — pass n_rows when the count is already known to avoid
+    the extra scan. Candidates come from ONE
     self-join keyed on (band index, band value); verification is the exact
     quantized cosine, so the emitted pairs are deterministic on any
     partitioning. Raising band_bits with log2(n) holds candidate volume
@@ -620,13 +328,8 @@ def lsh_neardup_pairs(
         if cap_metrics is not None:
             cap_metrics["max_bucket_size_resolved"] = max_bucket_size
     # One quantization pass, three consumers (signatures + both verify-join
-    # sides) — checkpoint so the lineage doesn't re-execute per consumer
-    # (ADVICE r11; the simhash twin already did this).
-    v = quantize_embeddings(df, id_col, vec_col).localCheckpoint(eager=True)
-    # Aggregates the already-materialized checkpoint — near-free, and it
-    # catches the silent all-in-one-bucket collapse a dim mismatch causes
-    # (r15 review; see assert_vector_dim).
-    assert_vector_dim(v, "q", dim)
+    # sides), dim-checked in the same job.
+    v = quantize_checked(df, dim, id_col, vec_col)
     sig = banded_signatures(v, n_bands=n_bands, band_bits=band_bits, dim=dim)
     if max_bucket_size is not None:
         from glue_etl_framework_spark.ext.dedup import drop_hot_buckets
@@ -674,3 +377,128 @@ def lsh_neardup_pairs(
                 metrics=cap_metrics,
             )
     return out
+
+
+# ------------------------------------------------ exact and IVF top-k ----
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Keep the k highest-cosine (query_id, neighbor_id) rows per query,
+    ties to the lowest neighbor id; cosine rounded to 9 places so the
+    emitted value is stable across engines."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (
+        pairs.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"))
+    )
+
+
+def exact_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k: (query_id, neighbor_id, cosine) for every
+    vector of the quantized ``queries`` frame against the quantized
+    ``corpus`` frame, a vector never being its own neighbor. The (small)
+    query side is broadcast against one corpus scan with a per-query
+    top-k (row_number) — no global sort and no corpus x corpus product.
+    The ground truth every approximate search here is measured against."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na")
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb")
+    )
+    pairs = (
+        F.broadcast(q)
+        .join(c, F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", quantized_cosine().alias("cosine"))
+    )
+    return _top_k(pairs, k)
+
+
+def coarse_cells(
+    v: DataFrame,
+    n_cells: int,
+    n_probe: int = 1,
+    is_query: Column | None = None,
+    cell_col: str = "cid",
+) -> tuple[DataFrame, DataFrame]:
+    """IVF coarse quantizer over a quantized (vec_id, q, nq) frame.
+    Returns (assign, probes):
+
+    - assign (vec_id, cell_col): every vector's nearest cell by exact
+      quantized cosine, ties to the lowest cell id, via max_by over
+      (cos, -cell) — a map-side partial aggregate, so one row per vector
+      reaches the shuffle instead of all n x K scored rows;
+    - probes (query_id, cell_col): the ``n_probe`` nearest cells of every
+      vector matching ``is_query`` (all vectors when None), ranked by
+      cosine desc then cell id.
+
+    Cells are a FIXED-size deterministic sample — the bottom ``n_cells``
+    vec_ids by md5, a TakeOrdered whose map side keeps n_cells rows per
+    partition — so the cell broadcast is O(K) bytes at any corpus size and
+    scoring is O(n*K), linear in n. The sample is pinned with
+    localCheckpoint so callers that consume both frames build it once.
+    Both frames are lazy; an unused one costs nothing."""
+    if n_probe < 1:
+        raise ValueError("n_probe must be >= 1 (0 would silently probe nothing)")
+    cent = F.broadcast(
+        v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(n_cells)
+        .select(
+            F.col("vec_id").alias(cell_col),
+            F.col("q").alias("cq"),
+            F.col("nq").alias("cnq"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    scored = v.join(cent, how="cross").select(
+        "vec_id", cell_col, quantized_cosine("q", "nq", "cq", "cnq").alias("cos")
+    )
+    assign = scored.groupBy("vec_id").agg(
+        F.max_by(
+            cell_col, F.struct(F.col("cos"), (-F.col(cell_col)).alias("nc"))
+        ).alias(cell_col)
+    )
+    rank_w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col(cell_col))
+    probe_from = scored if is_query is None else scored.filter(is_query)
+    probes = (
+        probe_from.withColumn("rn", F.row_number().over(rank_w))
+        .filter(F.col("rn") <= n_probe)
+        .select(F.col("vec_id").alias("query_id"), cell_col)
+    )
+    return assign, probes
+
+
+def ivf_topk(
+    v: DataFrame,
+    k: int,
+    n_cells: int,
+    n_probe: int,
+    is_query: Column | None = None,
+) -> DataFrame:
+    """IVF (inverted-file) approximate top-k over a quantized (vec_id, q,
+    nq) frame: (query_id, neighbor_id, cosine) for every vector matching
+    ``is_query`` (all when None), scoring only the vectors assigned to the
+    query's ``n_probe`` nearest of ``n_cells`` cells (coarse_cells) —
+    pairs scored shrink by ~n_cells/n_probe vs exact_topk. Up to ``k``
+    rows per query; fewer when the probed cells hold fewer than k other
+    vectors. The probe-to-cell candidate join and the query-vector lookup
+    are broadcasts; the shuffles are the assignment aggregate, the
+    corpus-side join keyed on neighbor_id, and the ranking window. ``v``
+    feeds five consumers: pass a checkpointed frame when its lineage is
+    expensive."""
+    assign, probes = coarse_cells(v, n_cells, n_probe, is_query)
+    qv = v.select(F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na"))
+    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
+    cand = (
+        F.broadcast(probes)
+        .join(assign, "cid")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
+    return _top_k(
+        cand.join(F.broadcast(qv), "query_id")
+        .join(nv, "neighbor_id")
+        .select("query_id", "neighbor_id", quantized_cosine().alias("cosine")),
+        k,
+    )

@@ -5,8 +5,9 @@ Design for 100 TB: every variant avoids the all-pairs cross product —
 exact/normalized dedup is one hash-groupBy; MinHash/LSH and SimHash band
 candidates so the self-join only touches same-bucket rows. All hashing uses
 md5 (bit-identical across engines) so each operator is fully oracle-checked;
-the pyspark.ml MinHashLSH variant lives in glue_etl_framework_spark.ext.dedup
-(pytest-verified, since ml seeds aren't portable SQL).
+the parameterized production form of the MinHash banding (any corpus, with
+the bounded-output caps) is glue_etl_framework_spark.ext.dedup
+.minhash_banded_candidate_pairs, built on the same _minhash_candidates.
 """
 
 from __future__ import annotations

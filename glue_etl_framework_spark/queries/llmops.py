@@ -1630,7 +1630,8 @@ def similarity_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query side is the small one by construction; for query sets beyond
     broadcast size, band both sides with hyperplane LSH first
     (similarity_lsh_hyperplane_pairs is that scale path)."""
-    from glue_etl_framework_spark.queries.similarity import _dot, _quantized
+    from glue_etl_framework_spark.ext.similarity import quantized_cosine
+    from glue_etl_framework_spark.queries.similarity import _quantized
 
     v = _quantized(spark, sf_dir)
     queries = v.filter(F.col("vec_id") % RADIUS_QMOD == 0).select(
@@ -1641,9 +1642,7 @@ def similarity_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"),
         F.col("nq").alias("nb"),
     )
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    cosine = quantized_cosine()
     return (
         F.broadcast(queries)
         .join(corpus, F.col("neighbor_id") != F.col("query_id"))
@@ -1718,11 +1717,9 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("nid"), F.col("label").alias("nlabel"),
         F.col("q").alias("qb"), F.col("nq").alias("nb"),
     )
-    from glue_etl_framework_spark.queries.similarity import _dot
+    from glue_etl_framework_spark.ext.similarity import quantized_cosine
 
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    cosine = quantized_cosine()
     pairs = (
         F.broadcast(queries)
         .join(corpus, F.col("nid") != F.col("qid"))
@@ -1942,7 +1939,8 @@ def curation_crossmodal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer dot product. Nothing here is all-pairs — cost is the verified
     dedup plus two lookups."""
     from glue_etl_framework_spark.queries.dedup import dedup_minhash_verified
-    from glue_etl_framework_spark.queries.similarity import _dot, _quantized
+    from glue_etl_framework_spark.ext.similarity import quantized_cosine
+    from glue_etl_framework_spark.queries.similarity import _quantized
 
     pairs = dedup_minhash_verified(spark, sf_dir)
     v = _quantized(spark, sf_dir)
@@ -1950,9 +1948,7 @@ def curation_crossmodal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("nq").alias("na"))
     b = v.select(F.col("vec_id").alias("doc_b"), F.col("q").alias("qb"),
                  F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    cosine = quantized_cosine()
     return (
         pairs.join(a, "doc_a").join(b, "doc_b")
         .select(
@@ -4942,10 +4938,11 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise both K's; the plan shape is constant."""
     from pyspark.sql import Window as W
 
+    from glue_etl_framework_spark.ext.similarity import coarse_cells
     from glue_etl_framework_spark.queries.similarity import (
+        N_CENTROIDS,
         N_PROBE,
         _quantized,
-        coarse_cells,
     )
 
     sub, csub, assign_pq = _pq_frames(spark, sf_dir)
@@ -4956,13 +4953,8 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    _, scored, cassign = coarse_cells(v, "ccid")
-    rn_w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("ccid"))
-    probes = (
-        scored.filter(F.col("vec_id") < PQ_N_QUERIES)
-        .withColumn("rn", F.row_number().over(rn_w))
-        .filter(F.col("rn") <= N_PROBE)
-        .select(F.col("vec_id").alias("query_id"), "ccid")
+    cassign, probes = coarse_cells(
+        v, N_CENTROIDS, N_PROBE, F.col("vec_id") < PQ_N_QUERIES, cell_col="ccid"
     )
     dist = F.aggregate(
         F.zip_with(F.col("sq"), F.col("cs"), lambda a, b: (a - b) * (a - b)),

@@ -7,18 +7,29 @@ products and squared norms are then exact integer sums (order-independent,
 < 2^53), and cosine = dot / (sqrt(nq_a) * sqrt(nq_b)) is a deterministic
 double. This removes float-summation-order nondeterminism entirely.
 
-Scale path: the LSH-bucketed ANN variant (random-hyperplane signatures via
-the portable md5-bit trick) is in glue_etl_framework_spark.ext.similarity
-together with pyspark.ml BucketedRandomProjectionLSH; its recall against
-this exact baseline is property-tested in tests/.
+Every search algorithm here is a call into
+glue_etl_framework_spark.ext.similarity (exact cosine, exact top-k, the IVF
+coarse quantizer and top-k, banded hyperplane LSH) that pins the fixture
+constants below, so the oracle certifies the library users call.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from glue_etl_framework_spark.ext.similarity import (
+    band_value_sql,
+    banded_signatures,
+    coarse_cells,
+    exact_topk,
+    hyperplane_signs,
+    ivf_topk,
+    lsh_neardup_pairs,
+    quantize_embeddings,
+    quantized_cosine,
+    quantized_cosine_joined,
+)
 from glue_etl_framework_spark.queries import register, t
 from glue_etl_framework_spark.queries.dedup import SHINGLE_DF_CAP
 
@@ -46,55 +57,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping SCALE == QUANT_SCALE in sync; the oracle SQL pins 2^20, so a
     drift in either copy would break the bit-for-bit contract silently).
     PLANS.md regen confirmed the delegation is plan-identical."""
-    from glue_etl_framework_spark.ext.similarity import quantize_embeddings
-
     return quantize_embeddings(t(spark, sf_dir, "embeddings"))
-
-
-def _dot(qa, qb):
-    return F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def coarse_cells(v: DataFrame, cell_col: str = "cid"):
-    """Shared IVF coarse quantizer used by similarity_ann_ivf,
-    dedup_semdedup, and llmops.similarity_ivf_pq_topk: FIXED-size
-    deterministic centroid sample (bottom-N_CENTROIDS vec_ids by md5 — a
-    TakeOrdered, O(K) broadcast at any corpus size), exact quantized
-    cosine scoring (n x K, map-side), and nearest-cell assignment via
-    max_by over (cos, -cell) — one row per vector reaches the shuffle,
-    ties to the lowest cell id, matching _kmeans_assign_sql exactly.
-    Returns (cent, scored, assign); ``scored`` is exposed for callers
-    that also need per-query probe lists (row_number over it)."""
-    # the centroid sample is a full-corpus TakeOrdered; pin it with
-    # localCheckpoint so multi-consumer callers (ivf_pq_topk probes +
-    # cell assignment) build it once instead of once per broadcast
-    # (r5 plan audit: 2x TakeOrderedAndProject without this)
-    cent = F.broadcast(
-        v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias(cell_col),
-            F.col("q").alias("cq"),
-            F.col("nq").alias("cnq"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cos_to_cent = _dot(F.col("q"), F.col("cq")) / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("cnq").cast("double"))
-    )
-    scored = v.join(cent, how="cross").select(
-        "vec_id", cell_col, cos_to_cent.alias("cos")
-    )
-    assign = scored.groupBy("vec_id").agg(
-        F.max_by(
-            cell_col, F.struct(F.col("cos"), (-F.col(cell_col)).alias("nc"))
-        ).alias(cell_col)
-    )
-    return cent, scored, assign
 
 
 @register(
@@ -123,30 +86,7 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scan with a per-query top-k (row_number), no global sort and no
     corpus x corpus blowup."""
     v = _quantized(spark, sf_dir)
-    queries = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na")
-    )
-    corpus = v.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb")
-    )
-    pairs = (
-        F.broadcast(queries)
-        .join(corpus, F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qa"), F.col("qb"))
-                / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"))
-    )
+    return exact_topk(v.filter(F.col("vec_id") < N_QUERIES), v, TOP_K)
 
 
 @register(
@@ -176,9 +116,7 @@ def similarity_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = v.join(lab, "vec_id")
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nq").alias("na"), "label")
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nq").alias("nb"), "label")
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    cosine = quantized_cosine()
     return (
         a.join(b, "label")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -244,53 +182,22 @@ _COSINE_SQL = (
 )
 def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the 100 TB scale path for
-    ANN. Coarse quantizer: a FIXED-size deterministic centroid sample
-    (bottom-K vec_ids by md5 — a TakeOrdered, so selection is map-side
-    top-K with no full shuffle, and K does NOT grow with the corpus);
-    every vector is assigned to its nearest centroid (an n x K broadcast
-    join — the K-row broadcast is constant-size, so assignment is
-    shuffle-free and O(n*K), linear in n); a query scores only the vectors
-    in its nprobe=2 nearest centroid lists, cutting scored pairs by
-    ~K/nprobe vs brute force. Exact quantized cosine everywhere, so the
-    whole pipeline is oracle-checkable; recall vs brute force is
-    property-tested in tests/test_ext.py.
+    ANN: ext.similarity.ivf_topk pinned at N_CENTROIDS fixed-sample cells
+    (the cell broadcast is constant-size, assignment O(n*K)), N_PROBE
+    probed cells per query and TOP_K neighbors. A query scores only the
+    vectors in its probed cells, cutting scored pairs by ~K/N_PROBE vs
+    brute force. Exact quantized cosine everywhere, so the whole pipeline
+    is oracle-checkable; recall vs exact_topk is tested in
+    tests/test_ext.py.
 
-    r16: the quantized frame feeds FIVE consumers (centroid sample, n x K
+    The quantized frame feeds five consumers (centroid sample, n x K
     scoring, both exact-cosine sides, the query broadcast) over a
     no-exchange scan+transform subtree — one DATA_SIZED checkpoint = one
-    quantization pass (the dedup_semdedup / similarity_ivf_pq_topk
-    pattern, 0.84x-0.91x on their 10x ladders)."""
+    quantization pass."""
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    rn_w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cid"))
-    _, scored, assign = coarse_cells(v, "cid")
-    probes = (
-        scored.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("rn", F.row_number().over(rn_w))
-        .filter(F.col("rn") <= N_PROBE)
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    qv = v.select(F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na"))
-    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cand = (
-        F.broadcast(probes)
-        .join(assign, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    topk_w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rn", F.row_number().over(topk_w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"))
-    )
+    return ivf_topk(v, TOP_K, N_CENTROIDS, N_PROBE, F.col("vec_id") < N_QUERIES)
 
 
 N_HYPERPLANES = 16  # signature bits; bands of 8 -> 2 bands
@@ -303,17 +210,6 @@ _BAND_BITS = 8
 # probe; RECIPES.md "Scale LSH signature bits with the corpus").
 
 
-def _hyperplane_signs(j: int, dim: int = 64) -> list[int]:
-    """Deterministic pseudo-random +-1 hyperplane components: sign of the
-    top bit of md5("j:i") — reproducible in any engine/language, baked into
-    both the Spark plan and the oracle SQL as literals. Shared with the
-    parameterized ext builders (one hyperplane family for every banding
-    shape)."""
-    from glue_etl_framework_spark.ext.similarity import hyperplane_signs
-
-    return hyperplane_signs(j, dim)
-
-
 def _band_exprs_sql() -> list[str]:
     """SQL expressions for the two 8-bit band values of the hyperplane
     signature of q (quantized embedding array)."""
@@ -322,7 +218,7 @@ def _band_exprs_sql() -> list[str]:
         bits = []
         for k in range(_BAND_BITS):
             j = b * _BAND_BITS + k
-            signs = _hyperplane_signs(j)
+            signs = hyperplane_signs(j)
             arr = "list_value(" + ", ".join(str(s) for s in signs) + ")"
             proj = f"list_sum(list_transform(range(1, 65), i -> {arr}[i] * q[i]))"
             bits.append(f"(CASE WHEN {proj} > 0 THEN {1 << k} ELSE 0 END)")
@@ -335,8 +231,6 @@ def _hyperplane_sig(v: DataFrame) -> DataFrame:
     signature, one row per vector per band — the LSH index frame shared by
     the pairs join and the multi-probe query path. Thin pin over the
     parameterized ext builder at the oracle's banding shape."""
-    from glue_etl_framework_spark.ext.similarity import banded_signatures
-
     return banded_signatures(
         v, n_bands=N_HYPERPLANES // _BAND_BITS, band_bits=_BAND_BITS
     )
@@ -376,40 +270,13 @@ def similarity_lsh_hyperplane_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     candidates collide on a band equi-join (shuffle keyed on an 8-bit band
     value — never an all-pairs product), then exact cosine >= 0.35 verify.
     Raising bands/bits trades recall vs candidate volume; recall against
-    the label-blocked exact pairs is property-tested in tests/.
-
-    r16: the quantized frame feeds THREE consumers (signatures + both
-    verify-join sides) over a scan+transform subtree with no exchange —
-    nothing for AQE to reuse, so the scan and per-element quantization ran
-    three times. One DATA_SIZED checkpoint = one pass (the pattern
-    ext.similarity.lsh_neardup_pairs already used; ADVICE r11)."""
-    from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
-
-    v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    # One (band_idx, band_value) row per vector per band, then ONE self-join
-    # keyed on both — the same banded shape as MinHash LSH. The per-band
-    # union-of-self-joins formulation re-derives the signature lineage
-    # (quantize + 16 hyperplane projections) once per band per side; this
-    # computes it once and shuffles only (vec_id, bidx, bv) triples.
-    sig = _hyperplane_sig(v)
-    a_side = sig.select(F.col("vec_id").alias("vec_a"), "bidx", "bv")
-    b_side = sig.select(F.col("vec_id").alias("vec_b"), "bidx", "bv")
-    cand = (
-        a_side.join(b_side, ["bidx", "bv"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    x = v.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nq").alias("na"))
-    y = v.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    return (
-        cand.join(x, "vec_a")
-        .join(y, "vec_b")
-        .filter(cosine >= 0.35)
-        .select("vec_a", "vec_b", F.round(cosine, 9).alias("cosine"))
+    the label-blocked exact pairs is property-tested in tests/. The body is
+    ext.similarity.lsh_neardup_pairs at the oracle's banding shape."""
+    return lsh_neardup_pairs(
+        t(spark, sf_dir, "embeddings"),
+        threshold=0.35,
+        n_bands=N_HYPERPLANES // _BAND_BITS,
+        band_bits=_BAND_BITS,
     )
 
 
@@ -504,9 +371,7 @@ def similarity_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _quantized(spark, sf_dir)
 
     def assign(centroids: DataFrame) -> DataFrame:
-        cos = _dot(F.col("q"), F.col("cq")) / (
-            F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("cnq").cast("double"))
-        )
+        cos = quantized_cosine("q", "nq", "cq", "cnq")
         # max_by over (cos, -cid): partial+final hash aggregate, one row per
         # vector at the shuffle (vs sorting all n x K rows under a window).
         return (
@@ -622,27 +487,13 @@ def similarity_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataF
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    # One SQL-string parse per band (r15 — see ext.similarity.band_value_sql)
-    from glue_etl_framework_spark.ext.similarity import band_value_sql
-
-    band_cols = [
-        F.expr(band_value_sql(b, _BAND_BITS, 64, "q")).alias(f"band{b}")
-        for b in range(N_HYPERPLANES // _BAND_BITS)
-    ]
-    sig = v.select("vec_id", F.posexplode(F.array(*band_cols)).alias("bidx", "bv"))
+    sig = _hyperplane_sig(v)
     is_ref = F.col("vec_id") % REF_CORPUS_MOD == 0
     bench = sig.filter(is_ref).select(F.col("vec_id").alias("ref_id"), "bidx", "bv")
     cand = sig.filter(~is_ref)
     hits = cand.join(bench, ["bidx", "bv"]).select("vec_id", "ref_id").distinct()
-    x = v.select("vec_id", F.col("q").alias("qa"), F.col("nq").alias("na"))
-    y = v.select(F.col("vec_id").alias("ref_id"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
     agg = (
-        hits.join(x, "vec_id")
-        .join(y, "ref_id")
-        .select("vec_id", cosine.alias("cosine"))
+        quantized_cosine_joined(v, hits, "vec_id", "ref_id")
         .groupBy("vec_id")
         .agg(
             F.count(F.when(F.col("cosine") >= 0.35, 1)).alias("n_matches"),
@@ -789,8 +640,6 @@ def _semdedup_band_members(v: DataFrame, assign: DataFrame) -> DataFrame:
     diverge). Band values build as one SQL-string parse per band (r15
     optimization — see ext.similarity.band_value_sql: the unrolled
     F.lit construction dominated the builder's wall in py4j calls)."""
-    from glue_etl_framework_spark.ext.similarity import band_value_sql
-
     band_cols = [
         F.expr(band_value_sql(b, _BAND_BITS, 64, "q")).alias(f"band{b}")
         for b in range(N_HYPERPLANES // _BAND_BITS)
@@ -898,11 +747,11 @@ def dedup_semdedup(
     # r16: the quantized frame feeds FIVE consumers (centroid sample, cell
     # assignment, band members, both verify sides) over a no-exchange
     # scan+transform subtree — one DATA_SIZED checkpoint = one
-    # quantization pass (see similarity_lsh_hyperplane_pairs).
+    # quantization pass.
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    _, _, assign = coarse_cells(v, "cid")
+    assign, _ = coarse_cells(v, N_CENTROIDS)
     mem = _semdedup_band_members(v, assign)
     if metrics is not None:
         metrics["input_vectors"] = assign.count()
@@ -920,15 +769,9 @@ def dedup_semdedup(
         .select("vec_a", "vec_b")
         .distinct()
     )
-    x = v.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nq").alias("na"))
-    y = v.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
     dropped = (
-        cand.join(x, "vec_a")
-        .join(y, "vec_b")
-        .filter(cosine >= SEMDEDUP_TAU)
+        quantized_cosine_joined(v, cand)
+        .filter(F.col("cosine") >= SEMDEDUP_TAU)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("is_dropped", F.lit(1))
@@ -1347,21 +1190,7 @@ def similarity_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFr
         F.sum("via_exact").alias("n_cand_plain"),
         F.count("*").alias("n_cand_multi"),
     )
-    qv = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na")
-    )
-    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    truth_w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    truth = (
-        F.broadcast(qv)
-        .join(nv, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rn", F.row_number().over(truth_w))
-        .filter(F.col("rn") <= TOP_K)
-    )
+    truth = exact_topk(v.filter(F.col("vec_id") < N_QUERIES), v, TOP_K)
     hits = (
         truth.join(cand, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
@@ -1378,7 +1207,7 @@ JL_SCALE = 1_000_000
 
 
 def _jl_proj_sql(vec: str, j: int) -> str:
-    signs = _hyperplane_signs(100 + j)  # disjoint seed range from the LSH bands
+    signs = hyperplane_signs(100 + j)  # disjoint seed range from the LSH bands
     arr = "list_value(" + ", ".join(str(s) for s in signs) + ")"
     return f"CAST(list_sum(list_transform(range(1, 65), i -> {arr}[i] * {vec}[i])) AS BIGINT)"
 
@@ -1438,7 +1267,7 @@ def similarity_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFram
     # invocation) purely to CONSTRUCT the plan; the parsed tree is
     # shape-identical, so execution and values are unchanged.
     def proj_sql(col, j):
-        arr = "array(" + ",".join(str(s) for s in _hyperplane_signs(100 + j)) + ")"
+        arr = "array(" + ",".join(str(s) for s in hyperplane_signs(100 + j)) + ")"
         return (
             f"aggregate(zip_with(`{col}`, {arr}, (x, s) -> x * CAST(s AS BIGINT)), "
             f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"

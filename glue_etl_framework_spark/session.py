@@ -234,10 +234,17 @@ def disk_headroom_warning(
 
 def warn_if_low_disk(spark: SparkSession, query_name: str) -> str | None:
     """Emit (and return) the disk-headroom warning for a live session,
-    reading the session's actual spill directory."""
+    probing the session's actual spill directory in Spark's own order:
+    ``SPARK_LOCAL_DIRS`` (which overrides the conf), then
+    ``spark.local.dir``, then /tmp. Only the first listed directory is
+    probed."""
     import warnings
 
-    path = spark.conf.get("spark.local.dir", None) or "/tmp"
+    path = (
+        os.environ.get("SPARK_LOCAL_DIRS")
+        or spark.conf.get("spark.local.dir", None)
+        or "/tmp"
+    )
     msg = disk_headroom_warning(query_name, path.split(",")[0])
     if msg is not None:
         warnings.warn(msg, UserWarning, stacklevel=2)

@@ -6,7 +6,8 @@ design point. Round 4 removed every such hint (queries/relational.py
 module docstring states the policy). This test makes the class
 mechanically un-regressable, the same way test_plans pins the
 unpartitioned-window allowlist: every `F.broadcast(<root>` occurrence in
-queries/*.py must use a root identifier allowlisted HERE for that module,
+queries/*.py, and in ext/similarity.py (the library the similarity entries
+call), must use a root identifier allowlisted HERE for that module,
 and the allowlist is compared with SET EQUALITY so a removed hint leaves
 a stale entry that fails too — additions and removals both require a
 conscious edit of this file, with the size justification alongside.
@@ -25,6 +26,7 @@ import re
 from pathlib import Path
 
 QUERIES_DIR = Path(__file__).resolve().parents[1] / "glue_etl_framework_spark" / "queries"
+EXT_SIMILARITY = QUERIES_DIR.parent / "ext" / "similarity.py"
 
 # module -> set of permitted F.broadcast(<root> identifiers.
 ALLOWED: dict[str, set[str]] = {
@@ -56,7 +58,10 @@ ALLOWED: dict[str, set[str]] = {
     # join_broadcast_hint); n/r: nation/region aliases
     "relational.py": {"c", "n", "nation", "p", "r", "region", "wmap"},
     # fixed-K centroids/codebooks, fixed query/probe batches, 1-row scalars
-    "similarity.py": {"cent", "centers", "centroids", "nd", "probes", "queries", "qv", "tot", "v"},
+    "similarity.py": {"cent", "centers", "centroids", "nd", "probes", "tot"},
+    # v: the fixed n_cells centroid sample (v.orderBy(md5).limit(n_cells));
+    # q/qv: the query batch; probes: n_probe cells per query
+    "ext/similarity.py": {"probes", "q", "qv", "v"},
     # 1-row corpus scalars
     "text.py": {"n", "nd", "total"},
     # nation/region (n/n2/sn/cn/r) + 1-row scalars (avg_pos/top/tot)
@@ -75,10 +80,10 @@ FORBIDDEN_ROOTS = {
 
 def _roots_by_module() -> dict[str, set[str]]:
     out: dict[str, set[str]] = {}
-    for f in sorted(QUERIES_DIR.glob("*.py")):
+    for f in [*sorted(QUERIES_DIR.glob("*.py")), EXT_SIMILARITY]:
         roots = set(re.findall(r"F\.broadcast\(\s*([A-Za-z_][A-Za-z_0-9]*)", f.read_text()))
         if roots:
-            out[f.name] = roots
+            out["ext/similarity.py" if f == EXT_SIMILARITY else f.name] = roots
     return out
 
 

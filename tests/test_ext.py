@@ -31,8 +31,8 @@ def test_minhash_finds_planted_duplicates(spark, docs):
     # plant: copy of doc with ids shifted by 10_000 — exact dup (J=1.0)
     planted = base.withColumn("doc_id", F.col("doc_id") + 10_000)
     corpus = base.unionByName(planted)
-    pairs = D.minhash_candidate_pairs(corpus, jaccard_threshold=0.8)
-    found = {(r.id_a, r.id_b) for r in pairs.collect()}
+    pairs = D.minhash_banded_candidate_pairs(corpus)
+    found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     expected = {(r.doc_id, r.doc_id + 10_000) for r in base.collect()}
     recall = len(found & expected) / len(expected)
     assert recall >= 0.9, f"planted-dup recall {recall}"
@@ -42,10 +42,10 @@ def test_dedup_idempotent(spark, docs):
     base = docs.limit(40)
     planted = base.withColumn("doc_id", F.col("doc_id") + 10_000)
     corpus = base.unionByName(planted)
-    pairs = D.minhash_candidate_pairs(corpus, jaccard_threshold=0.8)
-    once = D.dedup_keep_representative(corpus, pairs)
-    pairs2 = D.minhash_candidate_pairs(once, jaccard_threshold=0.8)
-    twice = D.dedup_keep_representative(once, pairs2)
+    pairs = D.minhash_banded_candidate_pairs(corpus)
+    once = D.dedup_keep_representative(corpus, pairs, a_col="doc_a", b_col="doc_b")
+    pairs2 = D.minhash_banded_candidate_pairs(once)
+    twice = D.dedup_keep_representative(once, pairs2, a_col="doc_a", b_col="doc_b")
     assert once.count() == twice.count()  # dedup(dedup(X)) == dedup(X)
     assert once.count() <= base.count()  # all planted dups collapsed
     # representatives are the original (min) ids
@@ -109,72 +109,62 @@ def test_connected_components_accept_emitter_pair_columns(spark):
 # ------------------------------------------------------------- similarity --
 
 def test_lsh_input_guards(spark, embeddings):
-    """r15 review guards: (a) a dim mismatch must raise a clear error
-    instead of silently zeroing every signature (one bucket, O(n^2)
-    candidates with bit-correct results); (b) a bad cap must fail at
-    entry, before the eager full-corpus checkpoints; (c) out-of-range
-    knobs raise like their siblings."""
-    import pytest as _pytest
-
-    from glue_etl_framework_spark.ext import similarity as S
-
+    """(a) a dim mismatch must raise a clear error instead of silently
+    zeroing every signature (one bucket, O(n^2) candidates with
+    bit-correct results); (b) a bad cap must fail at entry, before the
+    eager full-corpus checkpoints; (c) out-of-range knobs raise like their
+    siblings."""
     short = embeddings.select(
         "vec_id", F.slice("embedding", 1, 32).alias("embedding")
     )
-    with _pytest.raises(ValueError, match="dim=64"):
-        S.ann_topk_lsh(short, short.limit(2))
-    with _pytest.raises(ValueError, match="dim=64"):
+    with pytest.raises(ValueError, match="dim=64"):
         S.lsh_neardup_pairs(short, band_bits=8)
     for bad in ("Auto", "32", 0, -1, True):
-        with _pytest.raises(ValueError, match="max_bucket_size"):
+        with pytest.raises(ValueError, match="max_bucket_size"):
             S.lsh_neardup_pairs(embeddings, band_bits=8, max_bucket_size=bad)
-        with _pytest.raises(ValueError, match="max_bucket_size"):
+        with pytest.raises(ValueError, match="max_bucket_size"):
             D.simhash_neardup_pairs(
                 spark.createDataFrame([(1, "a b c")], ["doc_id", "text"]),
                 max_bucket_size=bad,
             )
-    with _pytest.raises(ValueError, match="n_probe"):
-        S.ivf_assign(embeddings, embeddings.limit(1).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-        ), n_probe=0)
-    with _pytest.raises(ValueError, match="n_planes"):
-        S.hyperplane_signatures(embeddings, n_planes=64)
+    with pytest.raises(ValueError, match="n_probe"):
+        S.ivf_topk(S.quantize_embeddings(embeddings), k=5, n_cells=4, n_probe=0)
 
 
 def test_ann_lsh_recall_vs_bruteforce(spark, embeddings):
-    corpus = embeddings
-    queries = embeddings.filter(F.col("vec_id") < 15)
-    exact = S.brute_force_topk(corpus, queries, k=5)
-    # few planes + many tables: the fixture embeddings are weakly clustered
-    # (top-5 neighbor cosine ~0.3-0.5), so per-plane collision ~0.6 needs
-    # short signatures for usable recall
-    approx = S.ann_topk_lsh(corpus, queries, k=5, n_planes=4, n_tables=8)
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.5, f"ANN recall vs exact top-5: {recall}"
+    """Banded hyperplane LSH pair recall against the exact all-pairs
+    cosine scan. Many short bands: the fixture embeddings are weakly
+    clustered, so per-plane collision at the threshold is ~0.6 and only
+    short band signatures give usable recall."""
+    threshold = 0.3
+    v = S.quantize_embeddings(embeddings)
+    all_pairs = (
+        v.select(F.col("vec_id").alias("vec_a"))
+        .crossJoin(v.select(F.col("vec_id").alias("vec_b")))
+        .filter(F.col("vec_a") < F.col("vec_b"))
+    )
+    exact = S.quantized_cosine_joined(v, all_pairs).filter(F.col("cosine") >= threshold)
+    approx = S.lsh_neardup_pairs(embeddings, threshold, n_bands=12, band_bits=3)
+    e = {(r.vec_a, r.vec_b) for r in exact.collect()}
+    a = {(r.vec_a, r.vec_b) for r in approx.collect()}
+    assert e, "fixture has no pairs above the threshold"
+    assert a <= e, "LSH emitted a pair the exact scan rejects"
+    recall = len(a) / len(e)
+    assert recall >= 0.8, f"LSH pair recall vs exact: {recall}"
 
 
 def test_ann_candidates_subset_semantics(spark, embeddings):
-    # every ANN result's cosine must equal the exact cosine (scores are
+    # every IVF result's cosine must equal the exact cosine (scores are
     # exact; only the candidate set is approximate)
-    queries = embeddings.filter(F.col("vec_id") < 5)
-    approx = S.ann_topk_lsh(embeddings, queries, k=3, n_planes=8, n_tables=3)
-    exact = S.brute_force_topk(embeddings, queries, k=embeddings.count())
+    v = S.quantize_embeddings(embeddings)
+    is_query = F.col("vec_id") < 5
+    approx = S.ivf_topk(v, k=3, n_cells=8, n_probe=2, is_query=is_query)
+    exact = S.exact_topk(v.filter(is_query), v, k=embeddings.count())
     ex = {(r.query_id, r.neighbor_id): r.cosine for r in exact.collect()}
-    for r in approx.collect():
-        assert abs(ex[(r.query_id, r.neighbor_id)] - r.cosine) < 1e-9
-
-
-def test_brp_lsh_similarity_join(spark, embeddings):
-    small = embeddings.limit(100)
-    planted = small.withColumn("vec_id", F.col("vec_id") + 10_000)
-    corpus = small.unionByName(planted)
-    pairs = S.brp_lsh_similarity_join(corpus, distance_threshold=0.01)
-    found = {(r.id_a, r.id_b) for r in pairs.collect()}
-    expected = {(r.vec_id, r.vec_id + 10_000) for r in small.collect()}
-    recall = len(found & expected) / len(expected)
-    assert recall >= 0.9, f"identical-vector recall {recall}"
+    rows = approx.collect()
+    assert len(rows) == 5 * 3
+    for r in rows:
+        assert ex[(r.query_id, r.neighbor_id)] == r.cosine
 
 
 # ------------------------------------------------------------------- text --
@@ -251,32 +241,35 @@ def test_frame_sampling(spark, docs):
 
 
 def test_ivf_topk_recall_vs_bruteforce(spark, embeddings):
-    from glue_etl_framework_spark.ext.similarity import brute_force_topk, ivf_topk
-
-    centroids = (
-        embeddings.filter(F.col("vec_id") % 25 == 0)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    )
-    queries = embeddings.filter(F.col("vec_id") < 8)
-    approx = ivf_topk(queries, embeddings, centroids, k=5, n_probe=3)
-    exact = brute_force_topk(embeddings, queries, k=5)
+    v = S.quantize_embeddings(embeddings)
+    is_query = F.col("vec_id") < 8
+    exact = S.exact_topk(v.filter(is_query), v, k=5)
+    approx = S.ivf_topk(v, k=5, n_cells=16, n_probe=4, is_query=is_query)
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     assert len(a) == 8 * 5
     recall = len(a & e) / len(e)
     assert recall >= 0.4, f"IVF recall too low: {recall}"
+    # probing every cell is exhaustive search: identical rows to exact
+    full = S.ivf_topk(v, k=5, n_cells=16, n_probe=16, is_query=is_query)
+    assert sorted(full.collect()) == sorted(exact.collect())
 
 
 def test_ivf_assign_partitions_whole_corpus(spark, embeddings):
-    from glue_etl_framework_spark.ext.similarity import ivf_assign
-
-    centroids = (
-        embeddings.filter(F.col("vec_id") % 50 == 0)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    )
-    assign = ivf_assign(embeddings, centroids, n_probe=1)
-    assert assign.count() == embeddings.count()
-    assert assign.select("vec_id").distinct().count() == embeddings.count()
+    v = S.quantize_embeddings(embeddings)
+    assign, probes = S.coarse_cells(v, n_cells=10, n_probe=3, is_query=F.col("vec_id") < 4)
+    n = embeddings.count()
+    assert assign.count() == n
+    assert assign.select("vec_id").distinct().count() == n
+    assert assign.select("cid").distinct().count() <= 10
+    # each query gets n_probe distinct cells, its nearest cell among them
+    cells: dict = {}
+    for r in probes.collect():
+        cells.setdefault(r.query_id, set()).add(r.cid)
+    assert sorted(cells) == [0, 1, 2, 3]
+    assert all(len(c) == 3 for c in cells.values())
+    for r in assign.filter(F.col("vec_id") < 4).collect():
+        assert r.cid in cells[r.vec_id]
 
 
 def test_pack_sequences_bin_budget_invariant(spark):

@@ -120,9 +120,65 @@ def test_disk_headroom_warning():
     assert disk_headroom_warning("q", path="/nonexistent-dir") is None
 
 
-def test_disk_headroom_live_session(spark):
+@pytest.mark.parametrize(
+    ("env_dirs", "conf_dir", "expected"),
+    [("/env/a,/env/b", "/conf/dir", "/env/a"),
+     (None, "/conf/x,/conf/y", "/conf/x"),
+     (None, None, "/tmp")],
+)
+def test_disk_headroom_probes_spark_spill_dir(monkeypatch, env_dirs, conf_dir, expected):
+    """warn_if_low_disk probes the directory Spark actually spills to —
+    SPARK_LOCAL_DIRS (which overrides the conf), then spark.local.dir,
+    then /tmp; first listed directory only — and trips only below the
+    floor. The free-space probe is injected, so the test checks the code,
+    not the host's disk."""
+    import shutil
+    from types import SimpleNamespace
+
+    from glue_etl_framework_spark.session import (
+        PAIR_EMITTER_MIN_FREE_DISK_GIB,
+        warn_if_low_disk,
+    )
+
+    if env_dirs is None:
+        monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_LOCAL_DIRS", env_dirs)
+    conf = {} if conf_dir is None else {"spark.local.dir": conf_dir}
+    session = SimpleNamespace(conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d)))
+    probed = []
+
+    def usage(free_gib):
+        def fake(path):
+            probed.append(path)
+            return SimpleNamespace(free=int(free_gib * 1024**3))
+        return fake
+
+    monkeypatch.setattr(shutil, "disk_usage", usage(PAIR_EMITTER_MIN_FREE_DISK_GIB + 1))
+    assert warn_if_low_disk(session, "q") is None
+    monkeypatch.setattr(shutil, "disk_usage", usage(PAIR_EMITTER_MIN_FREE_DISK_GIB - 1))
+    with pytest.warns(UserWarning, match="GiB free"):
+        msg = warn_if_low_disk(session, "q")
+    assert msg is not None and expected in msg
+    assert probed == [expected, expected]
+
+
+def test_disk_headroom_live_session_reads_spark_local_dirs(spark, monkeypatch, tmp_path):
+    """On a live session the SPARK_LOCAL_DIRS directory is the one probed:
+    reading only spark.local.dir would judge a session that spills to a
+    SPARK_LOCAL_DIRS volume by /tmp's free space."""
+    import shutil
+    from types import SimpleNamespace
+
     from glue_etl_framework_spark.session import warn_if_low_disk
 
-    # this box has plenty of headroom at rest; the call must be silent
-    # and must not raise regardless of spark.local.dir being unset
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path))
+    probed = []
+
+    def fake(path):
+        probed.append(path)
+        return SimpleNamespace(free=1024**5)
+
+    monkeypatch.setattr(shutil, "disk_usage", fake)
     assert warn_if_low_disk(spark, "q") is None
+    assert probed == [str(tmp_path)]

@@ -34,10 +34,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import functions as F
 
 from glue_etl_framework_spark import get_spark
+from glue_etl_framework_spark.ext.similarity import coarse_cells
 from glue_etl_framework_spark.queries.similarity import (
+    N_CENTROIDS,
     _quantized,
     _semdedup_band_members,
-    coarse_cells,
     dedup_semdedup,
 )
 
@@ -47,7 +48,7 @@ def _band_occupancy(spark, sf_dir):
     dedup_semdedup uses (_semdedup_band_members — shared, not copied,
     so the probe cannot diverge from what the cap acts on)."""
     v = _quantized(spark, sf_dir)
-    _, _, assign = coarse_cells(v, "cid")
+    assign, _ = coarse_cells(v, N_CENTROIDS)
     mem = _semdedup_band_members(v, assign)
     return (
         mem.groupBy("cid", "bidx", "bv")
