@@ -31,24 +31,9 @@ belongs to the training-data pipeline extensions (SURVEY §2.13).
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np
-
-_SHIPPED_CONTEXTS: set[int] = set()
-
-
-def ensure_shipped(spark) -> None:
-    """addPyFile this module so executor workers can import it flat
-    (``media_codecs.ensure_shipped`` playbook)."""
-    sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED_CONTEXTS:
-        return
-    sc.addPyFile(os.path.abspath(__file__))
-    _SHIPPED_CONTEXTS.add(key)
-
 
 # ---------------------------------------------------------------------------
 # Constants from the spec

@@ -11,15 +11,18 @@ Formats implemented:
   BGR rows padded to 4-byte boundaries. The uncompressed 24-bit profile is
   the format's lowest common denominator: every image tool can read the
   files these functions write (cross-checked by header-field tests).
-- **WAV**: RIFF/WAVE with a 16-byte ``fmt `` chunk and a ``data`` chunk:
-  PCM signed 16-bit (format 1) and G.711 mu-law (format 7, decoded to
-  linear 16-bit through the canonical CCITT expansion — pure integer
-  arithmetic, SQL-replicable).
+- **WAV**: RIFF/WAVE with a 16-byte ``fmt `` chunk and a ``data`` chunk
+  (written by ``wav_container``): PCM signed 16-bit (format 1), G.711
+  mu-law (format 7) and G.711 A-law (format 6), the two G.711 variants
+  decoded to linear 16-bit through the canonical CCITT expansions — pure
+  integer arithmetic, SQL-replicable.
 
 Both are byte-exact round-trip codecs (decode(encode(x)) == x, property-
 tested in tests/test_media_codecs.py). They intentionally reject
 anything outside the implemented profile loudly (ValueError with the
 offending field) rather than guessing — a decode gate should fail honest.
+The module imports only the stdlib, so ``session.ship_module`` can ship it
+to executor workers that import it flat (``ext.multimodal.map_rows``).
 
 Reference parity note: the reference engine has no multimodal layer at all
 (its surface is Spark SQL over tabular sources — /root/reference/glue/
@@ -29,25 +32,8 @@ pipeline extensions.
 
 from __future__ import annotations
 
-import os
 import struct
 
-_SHIPPED_CONTEXTS: set[int] = set()
-
-
-def ensure_shipped(spark) -> None:
-    """Ship THIS file to the executors via addPyFile (the
-    avro_py._ensure_shipped playbook): the grading driver adds the repo to
-    sys.path on the DRIVER only, so executor workers import the codecs
-    from the flat ``media_codecs`` module this call ships. Kernels must
-    use ``try: from glue_etl_framework_spark.ext.media_codecs import ...
-    except ImportError: from media_codecs import ...``."""
-    sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED_CONTEXTS:
-        return
-    sc.addPyFile(os.path.abspath(__file__))
-    _SHIPPED_CONTEXTS.add(key)
 
 # ---------------------------------------------------------------------------
 # BMP (24-bit uncompressed BI_RGB)
@@ -155,9 +141,19 @@ def encode_wav(sample_rate: int, samples: list[int], n_channels: int = 1) -> byt
     if len(samples) % n_channels:
         raise ValueError("wav: sample count not divisible by channel count")
     data = struct.pack(f"<{len(samples)}h", *samples)
-    block_align = n_channels * 2
+    return wav_container(1, n_channels, sample_rate, 16, data)
+
+
+def wav_container(
+    format_code: int, n_channels: int, sample_rate: int, bits: int, data: bytes
+) -> bytes:
+    """Wrap already-encoded sample bytes in a canonical RIFF/WAVE file: one
+    16-byte ``fmt `` chunk (format code 1 = PCM, 6 = G.711 A-law, 7 =
+    G.711 mu-law; ``bits`` per stored sample) and one ``data`` chunk."""
+    block_align = n_channels * bits // 8
     fmt = struct.pack(
-        "<HHIIHH", 1, n_channels, sample_rate, sample_rate * block_align, block_align, 16
+        "<HHIIHH",
+        format_code, n_channels, sample_rate, sample_rate * block_align, block_align, bits,
     )
     body = (
         b"WAVE"
@@ -254,16 +250,7 @@ def encode_wav_mulaw(sample_rate: int, samples: list[int], n_channels: int = 1) 
     if len(samples) % n_channels:
         raise ValueError("wav: sample count not divisible by channel count")
     data = bytes(mulaw_encode_sample(s) for s in samples)
-    block_align = n_channels
-    fmt = struct.pack(
-        "<HHIIHH", 7, n_channels, sample_rate, sample_rate * block_align, block_align, 8
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return wav_container(7, n_channels, sample_rate, 8, data)
 
 
 # ---------------------------------------------------------------------------
@@ -315,13 +302,4 @@ def encode_wav_alaw(sample_rate: int, samples: list[int], n_channels: int = 1) -
     if len(samples) % n_channels:
         raise ValueError("wav: sample count not divisible by channel count")
     data = bytes(alaw_encode_sample(s) for s in samples)
-    block_align = n_channels
-    fmt = struct.pack(
-        "<HHIIHH", 6, n_channels, sample_rate, sample_rate * block_align, block_align, 8
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return wav_container(6, n_channels, sample_rate, 8, data)

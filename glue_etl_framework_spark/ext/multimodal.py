@@ -2,13 +2,20 @@
 typed metadata, processed via Arrow-batched pandas UDFs (mapInPandas).
 
 The container has no image/audio libraries, but the decode gate is CLOSED
-offline for the two spec-simple container formats: ``default_image_decoder``
-really decodes 24-bit BMP and ``default_audio_decoder`` really decodes
-PCM-16 WAV via the pure-Python codecs in ``ext/media_codecs.py`` (the avro_py
-playbook). Formats that need native codec libs (JPEG/PNG/MP3/...) still
-raise NotImplementedError — inject a decoder for those. Everything
-around the kernel — schema, batching, partition sizing, metadata extraction
-— is real Spark plumbing and is what actually matters at 100 TB:
+offline by pure-Python codecs written from the public specs (the avro_py
+playbook): ``default_image_decoder`` really decodes 24-bit BMP
+(``ext/media_codecs.py``), baseline JPEG (``ext/jpeg_py.py``), PNG
+(``ext/png_py.py``) and GIF (``ext/gif_py.py``), and
+``default_audio_decoder`` really decodes PCM-16, G.711 mu-law and G.711
+A-law WAV (``ext/media_codecs.py``). Other formats (MP3, TIFF, ...) raise
+NotImplementedError — inject a decoder for those.
+
+``map_rows`` is the one runner for per-row Python kernels: the registry's
+``multimodal_*`` codec entries and ``extract_image_features`` all go
+through it, so the oracle-checked entries certify the path users call.
+Everything around the kernel — schema, batching, partition sizing,
+metadata extraction — is real Spark plumbing and is what actually matters
+at 100 TB:
 
 - blobs live in a ``binary`` column (parquet BinaryType) next to a
   ``struct`` metadata column; large assets use the path-reference pattern
@@ -22,17 +29,113 @@ around the kernel — schema, batching, partition sizing, metadata extraction
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import importlib
+from collections.abc import Callable, Mapping
+from types import ModuleType
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from glue_etl_framework_spark.session import ship_module
 
 IMAGE_META_SCHEMA = (
     "doc_id bigint, byte_len int, sha256 string, format string"
 )
 
 FEATURE_SCHEMA = "doc_id bigint, width int, height int, n_channels int, mean_luma double"
+
+# Magic bytes -> (codec module under ext/, decode function). Plain data, so
+# a kernel that reads it pickles it by value.
+IMAGE_CODECS: dict[bytes, tuple[str, str]] = {
+    b"BM": ("media_codecs", "decode_bmp"),
+    b"\xff\xd8\xff": ("jpeg_py", "decode_jpeg"),
+    b"\x89PNG\r\n\x1a\n": ("png_py", "decode_png"),
+    b"GIF87a": ("gif_py", "decode_gif"),
+    b"GIF89a": ("gif_py", "decode_gif"),
+}
+_IMAGE_MODULES = tuple(dict.fromkeys(module for module, _ in IMAGE_CODECS.values()))
+
+
+def map_rows(
+    df: DataFrame,
+    row_fn: Callable[..., tuple],
+    schema: str,
+    codecs: tuple[str, ...] = (),
+) -> DataFrame:
+    """Run a per-row Python function over ``df`` as one Arrow-batched
+    mapInPandas kernel — the only place this package builds one.
+
+    ``row_fn(*values, *modules)`` receives one row's values in ``df``'s
+    column order, then the codec modules named in ``codecs`` (module names
+    under ``ext/``, e.g. ``"jpeg_py"``), and returns one tuple in the
+    column order of ``schema`` (DDL). Each batch becomes one
+    ``pd.DataFrame`` built from those tuples.
+
+    The codecs are shipped with ``session.ship_module``, and the kernel
+    imports each one on the worker from the package, falling back to the
+    shipped flat module, so it runs on workers that cannot import this
+    package (a vanilla session with the repo on the driver's sys.path
+    only). The kernel is defined in here so cloudpickle pickles it by
+    value; ``row_fn`` must be pickled by value too — define it inside the
+    calling function, and let it reach module globals of this package only
+    through the modules it is handed."""
+    package = __package__
+    for name in codecs:
+        ship_module(df.sparkSession, importlib.import_module(f"{package}.{name}"))
+    columns = StructType.fromDDL(schema).fieldNames()
+
+    def kernel(batches):
+        import importlib as _importlib
+
+        import pandas as _pd
+
+        modules = []
+        for name in codecs:
+            try:
+                modules.append(_importlib.import_module(f"{package}.{name}"))
+            except ImportError:  # worker without the package: the shipped flat module
+                modules.append(_importlib.import_module(name))
+        for b in batches:
+            rows = [
+                row_fn(*values, *modules)
+                for values in zip(*(b[c].tolist() for c in b.columns))
+            ]
+            yield _pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(kernel, schema=schema)
+
+
+def _image_features_fn() -> Callable[[bytes, Mapping[str, ModuleType]], dict]:
+    def image_features(payload: bytes, codecs: Mapping[str, ModuleType]) -> dict:
+        """Decode ``payload`` with the IMAGE_CODECS entry its magic bytes
+        select (``codecs`` maps module name -> module) and return the
+        FEATURE_SCHEMA fields. Anything else raises NotImplementedError: a
+        decode gate should fail honest, never guess."""
+        for magic, (module, decode) in IMAGE_CODECS.items():
+            if payload.startswith(magic):
+                img = getattr(codecs[module], decode)(payload)
+                px = img["pixels"]
+                return {
+                    "width": img["width"],
+                    "height": img["height"],
+                    "n_channels": img["n_channels"],
+                    "mean_luma": (sum(px) / len(px)) / 255.0,
+                }
+        raise NotImplementedError(
+            "unrecognized image container: BMP (media_codecs.py), baseline "
+            "JPEG (jpeg_py.py), PNG (png_py.py) and GIF (gif_py.py) decode "
+            "offline — inject a decoder via extract_image_features(decoder=...) "
+            "for other formats"
+        )
+
+    return image_features
+
+
+# Built inside a function so cloudpickle pickles it by value: a module-level
+# function pickles by reference, which a worker that cannot import this
+# package fails to load.
+_image_features = _image_features_fn()
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -64,58 +167,12 @@ def binary_metadata(df: DataFrame, id_col: str = "doc_id", payload_col: str = "p
 def default_image_decoder(payload: bytes) -> dict:
     """REAL decode for BMP (pure-Python codec from the public spec —
     ext/media_codecs.py, the avro_py playbook), baseline JPEG
-    (ext/jpeg_py.py, ITU-T T.81) and PNG (ext/png_py.py, RFC 2083 over
-    stdlib zlib). Anything else raises NotImplementedError: a decode
-    gate should fail honest, never guess."""
-    if payload[:2] == b"BM":
-        from glue_etl_framework_spark.ext.media_codecs import decode_bmp
-
-        img = decode_bmp(payload)
-        px = img["pixels"]
-        return {
-            "width": img["width"],
-            "height": img["height"],
-            "n_channels": img["n_channels"],
-            "mean_luma": (sum(px) / len(px)) / 255.0,
-        }
-    if payload[:3] == b"\xff\xd8\xff":
-        from glue_etl_framework_spark.ext.jpeg_py import decode_jpeg
-
-        img = decode_jpeg(payload)
-        px = img["pixels"]
-        return {
-            "width": img["width"],
-            "height": img["height"],
-            "n_channels": img["n_channels"],
-            "mean_luma": (sum(px) / len(px)) / 255.0,
-        }
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from glue_etl_framework_spark.ext.png_py import decode_png
-
-        img = decode_png(payload)
-        px = img["pixels"]
-        return {
-            "width": img["width"],
-            "height": img["height"],
-            "n_channels": img["n_channels"],
-            "mean_luma": (sum(px) / len(px)) / 255.0,
-        }
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from glue_etl_framework_spark.ext.gif_py import decode_gif
-
-        img = decode_gif(payload)
-        px = img["pixels"]
-        return {
-            "width": img["width"],
-            "height": img["height"],
-            "n_channels": img["n_channels"],
-            "mean_luma": (sum(px) / len(px)) / 255.0,
-        }
-    raise NotImplementedError(
-        "unrecognized image container: BMP (media_codecs.py), baseline "
-        "JPEG (jpeg_py.py), PNG (png_py.py) and GIF (gif_py.py) decode "
-        "offline — inject a decoder via extract_image_features(decoder=...) "
-        "for other formats"
+    (ext/jpeg_py.py, ITU-T T.81), PNG (ext/png_py.py, RFC 2083 over
+    stdlib zlib) and GIF (ext/gif_py.py), selected by magic bytes through
+    IMAGE_CODECS. Anything else raises NotImplementedError."""
+    return _image_features(
+        payload,
+        {m: importlib.import_module(f"{__package__}.{m}") for m in _IMAGE_MODULES},
     )
 
 
@@ -152,27 +209,31 @@ def fake_image_decoder(payload: bytes) -> dict:
 
 def extract_image_features(
     df: DataFrame,
-    decoder: Callable[[bytes], dict] = default_image_decoder,
+    decoder: Callable[[bytes], dict] | None = None,
     id_col: str = "doc_id",
     payload_col: str = "payload",
     partitions: int | None = None,
 ) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches). The kernel
-    sees pandas Series of raw bytes; output schema is fixed/typed. This is
-    the pattern for any per-blob Python kernel (resize, frame-sample,
-    fingerprint)."""
+    """Decode + feature-extract via ``map_rows`` (Arrow batches); output
+    schema is FEATURE_SCHEMA. ``decoder=None`` decodes BMP/JPEG/PNG/GIF
+    like ``default_image_decoder`` and ships the four codecs itself, so it
+    runs on workers that cannot import this package. An injected
+    ``decoder(bytes) -> dict`` returns the FEATURE_SCHEMA fields other
+    than the id and must be importable (or picklable by value) on the
+    workers."""
     src = df.select(id_col, payload_col)
     if partitions:
         src = src.repartition(partitions)
+    codecs = _IMAGE_MODULES if decoder is None else ()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            feats = [decoder(bytes(p)) for p in b[payload_col]]
-            out = pd.DataFrame(feats)
-            out.insert(0, id_col, b[id_col].values)
-            yield out
+    def features(doc_id, payload, *modules):
+        if decoder is None:
+            f = _image_features(payload, dict(zip(codecs, modules)))
+        else:
+            f = decoder(payload)
+        return (doc_id, f["width"], f["height"], f["n_channels"], f["mean_luma"])
 
-    return src.mapInPandas(kernel, schema=FEATURE_SCHEMA)
+    return map_rows(src, features, FEATURE_SCHEMA, codecs)
 
 
 def sample_frames(

@@ -38,6 +38,7 @@ import io
 import json
 import os
 import struct
+import sys
 import uuid
 import zlib
 from datetime import date, datetime, timedelta, timezone
@@ -506,26 +507,6 @@ def avro_schema_of(spark_schema, name: str = "spark_row") -> dict[str, Any]:
 # Spark-facing API
 # ---------------------------------------------------------------------------
 
-_SHIPPED_CONTEXTS: set[int] = set()
-
-
-def _ensure_shipped(spark) -> None:
-    """Ship THIS file to the executors via addPyFile.
-
-    The grading driver (and any vanilla session) adds the repo to sys.path
-    on the DRIVER only; executor Python workers spawn with their own path
-    and cannot import ``glue_etl_framework_spark``. The decode/encode
-    closures below therefore import their helpers lazily — from the package
-    when importable, else from the ``avro_py`` module this call ships —
-    so they deserialize on any worker."""
-    sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED_CONTEXTS:
-        return
-    sc.addPyFile(os.path.abspath(__file__))
-    _SHIPPED_CONTEXTS.add(key)
-
-
 def read_avro(spark, path: str):
     """Distributed Avro read without the spark-avro jar.
 
@@ -537,6 +518,9 @@ def read_avro(spark, path: str):
     import glob as _glob
 
     import pandas as pd
+
+    # imported here, not at module level: workers import this file flat
+    from glue_etl_framework_spark.session import ship_module
 
     if os.path.isdir(path):
         candidates = _glob.glob(os.path.join(path, "**", "*.avro"), recursive=True)
@@ -566,20 +550,20 @@ def read_avro(spark, path: str):
             f"corrupt avro header in {matches[0]!r}: {type(e).__name__}: {e}"
         ) from e
     columns = [f.name for f in out_type.fields]
-    _ensure_shipped(spark)
+    ship_module(spark, sys.modules[__name__])
 
     # The closure must reference ONLY stdlib/pandas plus plain data: any
     # reference to this module's globals would make cloudpickle serialize a
     # module pointer the executor workers cannot import (driver-only
     # sys.path). Codec functions are imported inside, from the package if
-    # importable, else from the addPyFile-shipped flat module.
+    # importable, else from the flat module ``ship_module`` shipped.
     def decode_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
 
         try:
             from glue_etl_framework_spark.io.avro_py import decode_container as _dec
         except ImportError:
-            from avro_py import decode_container as _dec  # shipped via addPyFile
+            from avro_py import decode_container as _dec  # shipped by ship_module
 
         for pdf in batches:
             for blob in pdf["content"]:
@@ -607,7 +591,9 @@ def write_avro(df, path: str, codec: str = "deflate") -> int:
     columns = [f.name for f in df.schema.fields]
     os.makedirs(path, exist_ok=True)
     run_tag = uuid.uuid4().hex[:12]
-    _ensure_shipped(df.sparkSession)
+    from glue_etl_framework_spark.session import ship_module  # see read_avro
+
+    ship_module(df.sparkSession, sys.modules[__name__])
 
     # Stdlib-only closure — see decode_files for why no module globals.
     def write_partition(idx: int, rows) -> Iterator[str]:
@@ -616,7 +602,7 @@ def write_avro(df, path: str, codec: str = "deflate") -> int:
         try:
             from glue_etl_framework_spark.io.avro_py import encode_container as _enc
         except ImportError:
-            from avro_py import encode_container as _enc  # shipped via addPyFile
+            from avro_py import encode_container as _enc  # shipped by ship_module
 
         records = [dict(zip(columns, row)) for row in rows]
         if not records:

@@ -1,13 +1,16 @@
 """Multimodal-column operators (EXT — north star BASELINE.json:6): treat
 media payloads as opaque ``binary`` columns with typed metadata.
 
-The container has no image/audio codecs, so the *decode* step is stubbed in
-``glue_etl_framework_spark.ext.multimodal`` (mapInPandas plumbing, tested in
-tests/test_ext.py). The operators here are the oracle-checkable storage-side
-half: payload materialization (``encode`` → binary), content addressing
-(md5/sha256 over bytes), and fixed-size chunking — the manifest layout a
-100 TB blob pipeline needs (payload chunks + a metadata row per chunk, so a
-downstream decoder can fetch/process chunks independently per partition).
+Two halves. The storage-side operators are pure JVM expressions: payload
+materialization (``encode`` → binary), content addressing (md5/sha256 over
+bytes), and fixed-size chunking — the manifest layout a 100 TB blob
+pipeline needs (payload chunks + a metadata row per chunk, so a downstream
+decoder can fetch/process chunks independently per partition). The codec
+entries (``multimodal_*_decode_stats`` and friends) run REAL bytes through
+the pure-Python codecs in ``ext/`` (BMP/WAV/G.711 in media_codecs, JPEG,
+PNG, GIF): each is one per-document function handed to
+``ext.multimodal.map_rows``, the same runner ``extract_image_features``
+uses, so the oracle certifies the library path users call.
 
 Portability: payloads are derived as UTF-8 encodings of ``documents.text``
 (both engines encode the identical substring, so bytes match even for
@@ -16,9 +19,16 @@ non-ASCII); hashes are md5/sha256 (bit-identical across engines).
 
 from __future__ import annotations
 
+import hashlib
+import math
+import struct
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from glue_etl_framework_spark.ext.jpeg_py import QTAB_CHROMA, QTAB_LUMA, _quality_scale
+from glue_etl_framework_spark.ext.multimodal import map_rows
 from glue_etl_framework_spark.queries import register, t
 
 CHUNK_CHARS = 256  # chunk boundary in characters (== bytes for ASCII corpora)
@@ -385,59 +395,28 @@ def multimodal_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrow batch size x blob size (the ext/multimodal contract). The
     kernel imports codecs from the addPyFile-shipped flat module, so it
     deserializes on vanilla-session executors (avro_py playbook)."""
-    from glue_etl_framework_spark.ext.media_codecs import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, mc):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        h = 2 + dig[0] % 7
+        npix = 8 * h * 3
+        px = (dig * (npix // 16 + 1))[:npix]
+        blob = mc.encode_bmp(8, h, px)
+        img = mc.decode_bmp(blob)
+        p2 = img["pixels"]
+        if p2 != px:
+            raise ValueError("bmp round-trip mismatch")
+        return (
+            doc_id, img["width"], img["height"], img["n_channels"],
+            len(blob), sum(p2), (sum(p2) / len(p2)) / 255.0,
+        )
 
-    def kernel(batches):
-        import hashlib
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.media_codecs import decode_bmp, encode_bmp
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from media_codecs import decode_bmp, encode_bmp
-
-        for b in batches:
-            rows = []
-            for raw_id in b["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                h = 2 + dig[0] % 7
-                npix = 8 * h * 3
-                px = (dig * (npix // 16 + 1))[:npix]
-                blob = encode_bmp(8, h, px)
-                img = decode_bmp(blob)
-                p2 = img["pixels"]
-                if p2 != px:
-                    raise ValueError("bmp round-trip mismatch")
-                rows.append(
-                    (
-                        doc_id,
-                        img["width"],
-                        img["height"],
-                        img["n_channels"],
-                        len(blob),
-                        sum(p2),
-                        (sum(p2) / len(p2)) / 255.0,
-                    )
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "blob_bytes", "pixel_sum", "mean_luma",
-                ],
-            )
-
-    feats = d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, width int, height int, n_channels int, "
-            "blob_bytes bigint, pixel_sum bigint, mean_luma double"
-        ),
+    feats = map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, width int, height int, n_channels int, "
+        "blob_bytes bigint, pixel_sum bigint, mean_luma double",
+        ("media_codecs",),
     )
     return feats.select(
         "doc_id",
@@ -498,61 +477,29 @@ def multimodal_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoded samples; the oracle recomputes the int16 reconstruction
     (b0 + 256*b1, two's-complement CASE) arithmetically from the md5
     hex. Same no-shuffle Arrow-batched scale shape as the BMP entry."""
-    from glue_etl_framework_spark.ext.media_codecs import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, mc):
+        dig = hashlib.md5(f"wav:{doc_id}".encode()).digest()
+        base = list(struct.unpack("<8h", dig))
+        reps = 1 + dig[0] % 4
+        rate = 8000 + 100 * (dig[1] % 5)
+        samples = base * reps
+        blob = mc.encode_wav(rate, samples)
+        wav = mc.decode_wav(blob)
+        s = wav["samples"]
+        if s != samples:
+            raise ValueError("wav round-trip mismatch")
+        return (
+            doc_id, wav["sample_rate"], wav["n_channels"], len(s),
+            len(blob), sum(s), max(abs(x) for x in s),
+        )
 
-    def kernel(batches):
-        import hashlib
-        import struct as _struct
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.media_codecs import decode_wav, encode_wav
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from media_codecs import decode_wav, encode_wav
-
-        for b in batches:
-            rows = []
-            for raw_id in b["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(f"wav:{doc_id}".encode()).digest()
-                base = list(_struct.unpack("<8h", dig))
-                reps = 1 + dig[0] % 4
-                rate = 8000 + 100 * (dig[1] % 5)
-                samples = base * reps
-                blob = encode_wav(rate, samples)
-                wav = decode_wav(blob)
-                s = wav["samples"]
-                if s != samples:
-                    raise ValueError("wav round-trip mismatch")
-                rows.append(
-                    (
-                        doc_id,
-                        wav["sample_rate"],
-                        wav["n_channels"],
-                        len(s),
-                        len(blob),
-                        sum(s),
-                        max(abs(x) for x in s),
-                    )
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_channels", "n_samples",
-                    "blob_bytes", "sample_sum", "peak",
-                ],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, sample_rate int, n_channels int, n_samples int, "
-            "blob_bytes bigint, sample_sum bigint, peak bigint"
-        ),
+    return map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, sample_rate int, n_channels int, n_samples int, "
+        "blob_bytes bigint, sample_sum bigint, peak bigint",
+        ("media_codecs",),
     )
 
 
@@ -620,40 +567,20 @@ def multimodal_image_channel_stats(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: identical to the decode-stats entries — one
     shuffle-free Arrow-batched kernel pass, parallelism = partitions."""
-    from glue_etl_framework_spark.ext.media_codecs import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, mc):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        h = 2 + dig[0] % 7
+        npix = 8 * h * 3
+        px = (dig * (npix // 16 + 1))[:npix]
+        p2 = mc.decode_bmp(mc.encode_bmp(8, h, px))["pixels"]
+        return (doc_id, h, sum(p2[0::3]), sum(p2[1::3]), sum(p2[2::3]))
 
-    def kernel(batches):
-        import hashlib
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.media_codecs import decode_bmp, encode_bmp
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from media_codecs import decode_bmp, encode_bmp
-
-        for b in batches:
-            rows = []
-            for raw_id in b["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                h = 2 + dig[0] % 7
-                npix = 8 * h * 3
-                px = (dig * (npix // 16 + 1))[:npix]
-                img = decode_bmp(encode_bmp(8, h, px))
-                p2 = img["pixels"]
-                r, g, bl = sum(p2[0::3]), sum(p2[1::3]), sum(p2[2::3])
-                rows.append((doc_id, h, r, g, bl))
-            yield _pd.DataFrame(
-                rows, columns=["doc_id", "height", "r_sum", "g_sum", "b_sum"]
-            )
-
-    feats = d.mapInPandas(
-        kernel,
-        schema="doc_id bigint, height int, r_sum bigint, g_sum bigint, b_sum bigint",
+    feats = map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, height int, r_sum bigint, g_sum bigint, b_sum bigint",
+        ("media_codecs",),
     )
     npx = F.col("height") * 8  # pixels per channel
     return feats.select(
@@ -717,52 +644,22 @@ def multimodal_wav_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample ORDER as well as values (a frame-boundary or endianness slip
     changes ea/eb). Same shuffle-free Arrow-batched scale shape as the
     other decode entries."""
-    from glue_etl_framework_spark.ext.media_codecs import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, mc):
+        dig = hashlib.md5(f"wav:{doc_id}".encode()).digest()
+        base = list(struct.unpack("<8h", dig))
+        reps = 1 + dig[0] % 4
+        rate = 8000 + 100 * (dig[1] % 5)
+        s = mc.decode_wav(mc.encode_wav(rate, base * reps))["samples"]
+        frames = [sum(x * x for x in s[i : i + 4]) for i in range(0, len(s), 4)]
+        return (doc_id, len(frames), sum(frames), max(frames), frames[0])
 
-    def kernel(batches):
-        import hashlib
-        import struct as _struct
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.media_codecs import decode_wav, encode_wav
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from media_codecs import decode_wav, encode_wav
-
-        for b in batches:
-            rows = []
-            for raw_id in b["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(f"wav:{doc_id}".encode()).digest()
-                base = list(_struct.unpack("<8h", dig))
-                reps = 1 + dig[0] % 4
-                rate = 8000 + 100 * (dig[1] % 5)
-                wav = decode_wav(encode_wav(rate, base * reps))
-                s = wav["samples"]
-                frames = [
-                    sum(x * x for x in s[i : i + 4]) for i in range(0, len(s), 4)
-                ]
-                rows.append(
-                    (doc_id, len(frames), sum(frames), max(frames), frames[0])
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "total_energy",
-                    "max_frame_energy", "first_frame_energy",
-                ],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, n_frames int, total_energy bigint, "
-            "max_frame_energy bigint, first_frame_energy bigint"
-        ),
+    return map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, n_frames int, total_energy bigint, "
+        "max_frame_energy bigint, first_frame_energy bigint",
+        ("media_codecs",),
     )
 
 
@@ -823,72 +720,33 @@ def multimodal_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     a hash match certifies the subsampling geometry AND the second
     codec round-trip. Same shuffle-free Arrow-batched scale shape as
     the other decode entries (resize is CPU-bound; partitions ~ cores)."""
-    from glue_etl_framework_spark.ext.media_codecs import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, mc):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        h = 2 + dig[0] % 7
+        npix = 8 * h * 3
+        px = (dig * (npix // 16 + 1))[:npix]
+        src = mc.decode_bmp(mc.encode_bmp(8, h, px))["pixels"]
+        w_out, h_out = 4, (h + 1) // 2
+        out = bytearray()
+        for y in range(h_out):
+            for x in range(w_out):
+                i = (2 * y * 8 + 2 * x) * 3
+                out += src[i : i + 3]
+        small = mc.decode_bmp(mc.encode_bmp(w_out, h_out, bytes(out)))
+        blob2 = mc.encode_bmp(w_out, h_out, small["pixels"])
+        return (doc_id, small["width"], small["height"], len(blob2), sum(small["pixels"]))
 
-    def kernel(batches):
-        import hashlib
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.media_codecs import decode_bmp, encode_bmp
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from media_codecs import decode_bmp, encode_bmp
-
-        for b in batches:
-            rows = []
-            for raw_id in b["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                h = 2 + dig[0] % 7
-                npix = 8 * h * 3
-                px = (dig * (npix // 16 + 1))[:npix]
-                img = decode_bmp(encode_bmp(8, h, px))
-                src = img["pixels"]
-                w_out, h_out = 4, (h + 1) // 2
-                out = bytearray()
-                for y in range(h_out):
-                    for x in range(w_out):
-                        i = (2 * y * 8 + 2 * x) * 3
-                        out += src[i : i + 3]
-                small = decode_bmp(encode_bmp(w_out, h_out, bytes(out)))
-                blob2 = encode_bmp(w_out, h_out, small["pixels"])
-                rows.append(
-                    (
-                        doc_id,
-                        small["width"],
-                        small["height"],
-                        len(blob2),
-                        sum(small["pixels"]),
-                    )
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "out_width", "out_height",
-                    "out_blob_bytes", "out_pixel_sum",
-                ],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, out_width int, out_height int, "
-            "out_blob_bytes bigint, out_pixel_sum bigint"
-        ),
+    return map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, out_width int, out_height int, "
+        "out_blob_bytes bigint, out_pixel_sum bigint",
+        ("media_codecs",),
     )
 
 
 def _jpeg_decode_oracle() -> str:
-    from glue_etl_framework_spark.ext.jpeg_py import (
-        QTAB_CHROMA,
-        QTAB_LUMA,
-        _quality_scale,
-    )
-
     ql = int(_quality_scale(QTAB_LUMA, 85)[0])
     qc = int(_quality_scale(QTAB_CHROMA, 85)[0])
     b = [_md5_byte_sql("hx", j) for j in range(7)]
@@ -975,102 +833,63 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one Arrow-batched no-shuffle kernel pass like the
     BMP/WAV entries; the kernel imports the addPyFile-shipped flat
     module so it deserializes on vanilla-session executors."""
-    from glue_etl_framework_spark.ext.jpeg_py import ensure_shipped
 
-    ensure_shipped(spark)
+    # quality-85 DC quantizer steps, computed on the driver like the oracle
+    ql = int(_quality_scale(QTAB_LUMA, 85)[0])
+    qc = int(_quality_scale(QTAB_CHROMA, 85)[0])
+    s = math.sqrt(0.125)
+
+    def dc_cycle(v, q):
+        qdc = math.floor((8.0 * (v - 128.0)) / q + 0.5)
+        return (s * (qdc * float(q))) * s + 128.0
+
+    def per_doc(doc_id, jp):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        r, g, b = dig[0], dig[1], dig[2]
+        w, h = 8 + dig[3] % 9, 8 + dig[4] % 9
+        sub = "420" if dig[5] % 2 else "444"
+        ri = dig[6] % 3
+        blob = jp.encode_jpeg(
+            w, h, bytes([r, g, b]) * (w * h), quality=85,
+            subsample=sub, restart_interval=ri,
+        )
+        img = jp.decode_jpeg(blob)
+        # explicit raise (not assert): the decoder-correctness contract
+        # must survive python -O / PYTHONOPTIMIZE, which strips asserts
+        if (img["width"], img["height"], img["n_channels"]) != (w, h, 3):
+            raise ValueError("jpeg: decoded geometry mismatch")
+        px = np.frombuffer(img["pixels"], np.uint8).reshape(h, w, 3)
+        if not (px == px[0, 0]).all():
+            raise ValueError("jpeg: solid image decoded non-uniform")
+        # scalar DC-path replica (mirrored in the DuckDB oracle)
+        y = 0.299 * r + 0.587 * g + 0.114 * b
+        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
+        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
+        y2, cb2, cr2 = dc_cycle(y, ql), dc_cycle(cb, qc), dc_cycle(cr, qc)
+        rr = min(255, max(0, math.floor(y2 + 1.402 * (cr2 - 128.0) + 0.5)))
+        gg = min(255, max(0, math.floor(
+            y2 - 0.344136 * (cb2 - 128.0) - 0.714136 * (cr2 - 128.0) + 0.5)))
+        bb = min(255, max(0, math.floor(y2 + 1.772 * (cb2 - 128.0) + 0.5)))
+        got = tuple(int(v) for v in px[0, 0])
+        if max(abs(got[k] - v) for k, v in enumerate((rr, gg, bb))) > 1:
+            raise ValueError(
+                f"jpeg decode drifted from DC replica: {got} vs {(rr, gg, bb)}"
+            )
+        return (doc_id, w, h, 3, rr, gg, bb, (rr + gg + bb) * w * h)
+
     # the kernel is the most Python-expensive decode entry (~2.4ms/doc:
     # Huffman bit loops + 12 DCT blocks), and the fixture is one parquet
     # file -> one input split; repartition so the work rides every core.
     # The round-robin shuffle moves only doc_id (8 bytes/row) — at any
     # scale that is noise next to the kernel cost it parallelizes.
-    d = (
+    return map_rows(
         t(spark, sf_dir, "documents")
         .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def kernel(batches):
-        import hashlib
-        import math
-
-        import numpy as _np
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.jpeg_py import (
-                QTAB_CHROMA as _QC,
-                QTAB_LUMA as _QL,
-                _quality_scale,
-                decode_jpeg,
-                encode_jpeg,
-            )
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from jpeg_py import (
-                QTAB_CHROMA as _QC,
-                QTAB_LUMA as _QL,
-                _quality_scale,
-                decode_jpeg,
-                encode_jpeg,
-            )
-
-        ql = int(_quality_scale(_QL, 85)[0])
-        qc = int(_quality_scale(_QC, 85)[0])
-        s = math.sqrt(0.125)
-
-        def dc_cycle(v, q):
-            qdc = math.floor((8.0 * (v - 128.0)) / q + 0.5)
-            return (s * (qdc * float(q))) * s + 128.0
-
-        for batch in batches:
-            rows = []
-            for raw_id in batch["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                r, g, b = dig[0], dig[1], dig[2]
-                w, h = 8 + dig[3] % 9, 8 + dig[4] % 9
-                sub = "420" if dig[5] % 2 else "444"
-                ri = dig[6] % 3
-                blob = encode_jpeg(
-                    w, h, bytes([r, g, b]) * (w * h), quality=85,
-                    subsample=sub, restart_interval=ri,
-                )
-                img = decode_jpeg(blob)
-                # explicit raise (not assert): the decoder-correctness contract
-                # must survive python -O / PYTHONOPTIMIZE, which strips asserts
-                if (img["width"], img["height"], img["n_channels"]) != (w, h, 3):
-                    raise ValueError("jpeg: decoded geometry mismatch")
-                px = _np.frombuffer(img["pixels"], _np.uint8).reshape(h, w, 3)
-                if not (px == px[0, 0]).all():
-                    raise ValueError("jpeg: solid image decoded non-uniform")
-                # scalar DC-path replica (mirrored in the DuckDB oracle)
-                y = 0.299 * r + 0.587 * g + 0.114 * b
-                cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-                cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-                y2, cb2, cr2 = dc_cycle(y, ql), dc_cycle(cb, qc), dc_cycle(cr, qc)
-                rr = min(255, max(0, math.floor(y2 + 1.402 * (cr2 - 128.0) + 0.5)))
-                gg = min(255, max(0, math.floor(
-                    y2 - 0.344136 * (cb2 - 128.0) - 0.714136 * (cr2 - 128.0) + 0.5)))
-                bb = min(255, max(0, math.floor(y2 + 1.772 * (cb2 - 128.0) + 0.5)))
-                got = tuple(int(v) for v in px[0, 0])
-                if max(abs(got[k] - v) for k, v in enumerate((rr, gg, bb))) > 1:
-                    raise ValueError(
-                        f"jpeg decode drifted from DC replica: {got} vs {(rr, gg, bb)}"
-                    )
-                rows.append((doc_id, w, h, 3, rr, gg, bb, (rr + gg + bb) * w * h))
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "r_out", "g_out", "b_out", "pixel_sum",
-                ],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, width int, height int, n_channels int, "
-            "r_out bigint, g_out bigint, b_out bigint, pixel_sum bigint"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        per_doc,
+        "doc_id bigint, width int, height int, n_channels int, "
+        "r_out bigint, g_out bigint, b_out bigint, pixel_sum bigint",
+        ("jpeg_py",),
     )
 
 
@@ -1117,53 +936,25 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Average/Paeth) is pinned by hand-filtered streams in
     tests/test_png_py.py. Same no-shuffle Arrow-batched scale shape as
     the other decode entries."""
-    from glue_etl_framework_spark.ext.png_py import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, pp):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        w = 4 * (1 + dig[1] % 3)
+        h = 2 + dig[0] % 7
+        npix = w * h * 4
+        px = (dig * (npix // 16))[:npix]
+        img = pp.decode_png(pp.encode_png(w, h, px, n_channels=4))
+        p2 = img["pixels"]
+        if p2 != px:
+            raise ValueError("png round-trip mismatch")
+        return (doc_id, img["width"], img["height"], img["n_channels"], len(p2), sum(p2))
 
-    def kernel(batches):
-        import hashlib
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.png_py import decode_png, encode_png
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from png_py import decode_png, encode_png
-
-        for batch in batches:
-            rows = []
-            for raw_id in batch["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                w = 4 * (1 + dig[1] % 3)
-                h = 2 + dig[0] % 7
-                npix = w * h * 4
-                px = (dig * (npix // 16))[:npix]
-                blob = encode_png(w, h, px, n_channels=4)
-                img = decode_png(blob)
-                if img["pixels"] != px:
-                    raise ValueError("png round-trip mismatch")
-                p2 = img["pixels"]
-                rows.append(
-                    (doc_id, img["width"], img["height"], img["n_channels"],
-                     len(p2), sum(p2))
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "n_bytes", "pixel_sum",
-                ],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, width int, height int, n_channels int, "
-            "n_bytes bigint, pixel_sum bigint"
-        ),
+    return map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, width int, height int, n_channels int, "
+        "n_bytes bigint, pixel_sum bigint",
+        ("png_py",),
     )
 
 
@@ -1213,54 +1004,20 @@ def multimodal_mulaw_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     8 kHz narrowband is the classic speech-corpus encoding, so this is
     the audio twin of the PNG entry's lossless guarantee). Same
     no-shuffle Arrow-batched scale shape as the other decode entries."""
-    from glue_etl_framework_spark.ext.media_codecs import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, mc):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        reps = 1 + dig[0] % 4
+        wav = mc.decode_wav(mc.wav_container(7, 1, 8000, 8, dig * reps))
+        s = wav["samples"]
+        return (doc_id, wav["sample_rate"], len(s), sum(s), max(abs(v) for v in s))
 
-    def kernel(batches):
-        import hashlib
-        import struct as _struct
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.media_codecs import decode_wav
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from media_codecs import decode_wav
-
-        def container(data: bytes) -> bytes:
-            fmt = _struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-            body = (
-                b"WAVE"
-                + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                + b"data" + _struct.pack("<I", len(data)) + data
-            )
-            return b"RIFF" + _struct.pack("<I", len(body)) + body
-
-        for batch in batches:
-            rows = []
-            for raw_id in batch["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                reps = 1 + dig[0] % 4
-                wav = decode_wav(container(dig * reps))
-                s = wav["samples"]
-                rows.append(
-                    (doc_id, wav["sample_rate"], len(s), sum(s),
-                     max(abs(v) for v in s))
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_rate", "n_samples", "sample_sum", "peak"],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, sample_rate int, n_samples bigint, "
-            "sample_sum bigint, peak bigint"
-        ),
+    return map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, sample_rate int, n_samples bigint, "
+        "sample_sum bigint, peak bigint",
+        ("media_codecs",),
     )
 
 
@@ -1312,54 +1069,20 @@ def multimodal_alaw_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded sample exactly from the md5 hex — together the two entries
     pin both G.711 variants' full decode tables through the driver
     hash. Same no-shuffle Arrow-batched scale shape."""
-    from glue_etl_framework_spark.ext.media_codecs import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, mc):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        reps = 1 + dig[1] % 4
+        wav = mc.decode_wav(mc.wav_container(6, 1, 8000, 8, dig * reps))
+        s = wav["samples"]
+        return (doc_id, wav["sample_rate"], len(s), sum(s), max(abs(v) for v in s))
 
-    def kernel(batches):
-        import hashlib
-        import struct as _struct
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.media_codecs import decode_wav
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from media_codecs import decode_wav
-
-        def container(data: bytes) -> bytes:
-            fmt = _struct.pack("<HHIIHH", 6, 1, 8000, 8000, 1, 8)
-            body = (
-                b"WAVE"
-                + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                + b"data" + _struct.pack("<I", len(data)) + data
-            )
-            return b"RIFF" + _struct.pack("<I", len(body)) + body
-
-        for batch in batches:
-            rows = []
-            for raw_id in batch["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                reps = 1 + dig[1] % 4
-                wav = decode_wav(container(dig * reps))
-                s = wav["samples"]
-                rows.append(
-                    (doc_id, wav["sample_rate"], len(s), sum(s),
-                     max(abs(v) for v in s))
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_rate", "n_samples", "sample_sum", "peak"],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, sample_rate int, n_samples bigint, "
-            "sample_sum bigint, peak bigint"
-        ),
+    return map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, sample_rate int, n_samples bigint, "
+        "sample_sum bigint, peak bigint",
+        ("media_codecs",),
     )
 
 
@@ -1411,53 +1134,25 @@ def multimodal_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping, and the sub-block walk. Interlace and dictionary-reset
     paths are pinned separately in tests/test_gif_py.py. Same no-shuffle
     Arrow-batched scale shape as the other decode entries."""
-    from glue_etl_framework_spark.ext.gif_py import ensure_shipped
 
-    ensure_shipped(spark)
-    d = t(spark, sf_dir, "documents").select("doc_id")
+    def per_doc(doc_id, gp):
+        dig = hashlib.md5(str(doc_id).encode()).digest()
+        pal = [bytes((dig[k], dig[(k + 1) % 16], dig[(k + 2) % 16])) for k in range(16)]
+        w, h = 16, 1 + dig[0] % 6
+        px = b"".join(pal[dig[j % 16] % 16] for j in range(w * h))
+        img = gp.decode_gif(gp.encode_gif(w, h, px))
+        p2 = img["pixels"]
+        if p2 != px:
+            raise ValueError("gif round-trip mismatch")
+        return (
+            doc_id, img["width"], img["height"], img["n_channels"],
+            img["n_frames"], sum(p2),
+        )
 
-    def kernel(batches):
-        import hashlib
-
-        import pandas as _pd
-
-        try:
-            from glue_etl_framework_spark.ext.gif_py import decode_gif, encode_gif
-        except ImportError:  # executor worker: flat module shipped via addPyFile
-            from gif_py import decode_gif, encode_gif
-
-        for batch in batches:
-            rows = []
-            for raw_id in batch["doc_id"]:
-                doc_id = int(raw_id)
-                dig = hashlib.md5(str(doc_id).encode()).digest()
-                pal = [
-                    bytes((dig[k], dig[(k + 1) % 16], dig[(k + 2) % 16]))
-                    for k in range(16)
-                ]
-                w, h = 16, 1 + dig[0] % 6
-                px = b"".join(pal[dig[j % 16] % 16] for j in range(w * h))
-                blob = encode_gif(w, h, px)
-                img = decode_gif(blob)
-                if img["pixels"] != px:
-                    raise ValueError("gif round-trip mismatch")
-                p2 = img["pixels"]
-                rows.append(
-                    (doc_id, img["width"], img["height"], img["n_channels"],
-                     img["n_frames"], sum(p2))
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "n_frames", "pixel_sum",
-                ],
-            )
-
-    return d.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id bigint, width int, height int, n_channels int, "
-            "n_frames bigint, pixel_sum bigint"
-        ),
+    return map_rows(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        per_doc,
+        "doc_id bigint, width int, height int, n_channels int, "
+        "n_frames bigint, pixel_sum bigint",
+        ("gif_py",),
     )

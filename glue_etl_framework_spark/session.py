@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 import re
 from collections.abc import Mapping
+from types import ModuleType
 
 from pyspark.sql import SparkSession
 
@@ -197,6 +198,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# (applicationId, path) pairs already shipped. Keyed by application, not
+# id(sc): a stopped context's id can be reused by the next one.
+_SHIPPED: set[tuple[str, str]] = set()
+
+
+def ship_module(spark: SparkSession, module: ModuleType) -> None:
+    """Ship ``module``'s source file to every executor, once per
+    SparkContext and path.
+
+    A vanilla session may have this package on the DRIVER's sys.path only:
+    executor Python workers spawn with their own path and cannot import
+    ``glue_etl_framework_spark``. They can import a shipped file flat, by
+    its bare name, so a kernel closure imports its helpers lazily — from
+    the package when importable, else from the flat module this call ships
+    (``ext.multimodal.map_rows`` and the ``io.avro_py`` closures)."""
+    sc = spark.sparkContext
+    path = os.path.abspath(module.__file__)
+    key = (sc.applicationId, path)
+    if key in _SHIPPED:
+        return
+    sc.addPyFile(path)
+    _SHIPPED.add(key)
 
 
 # Spill headroom floor for pair-emitting aggregates: the r11 eleventh

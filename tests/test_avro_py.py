@@ -207,12 +207,17 @@ def test_hostile_deeply_nested_schema_normalized_to_value_error():
     must surface as the documented ValueError('corrupt avro container...'),
     not a raw RecursionError escaping _make_decoder / json.loads
     (ADVICE r06)."""
-    nested = '"long"'
-    for i in range(100_000):
-        nested = (
-            '{"type":"record","name":"r%d","fields":[{"name":"f","type":%s}]}'
-            % (i, nested)
+    # record r_i wraps r_{i-1}, innermost "long": the outermost prefix comes
+    # first and every level closes with "}]}". One join, not 100k re-copies.
+    depth = 100_000
+    nested = (
+        "".join(
+            '{"type":"record","name":"r%d","fields":[{"name":"f","type":' % i
+            for i in reversed(range(depth))
         )
+        + '"long"'
+        + "}]}" * depth
+    )
     blob = _hostile_container(nested)
     with pytest.raises(ValueError, match="corrupt avro"):
         decode_container(blob)
