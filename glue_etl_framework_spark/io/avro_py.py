@@ -520,7 +520,7 @@ def read_avro(spark, path: str):
     import pandas as pd
 
     # imported here, not at module level: workers import this file flat
-    from glue_etl_framework_spark.session import ship_module
+    from glue_etl_framework_spark.session import forget_zip_importers, ship_module
 
     if os.path.isdir(path):
         candidates = _glob.glob(os.path.join(path, "**", "*.avro"), recursive=True)
@@ -552,11 +552,13 @@ def read_avro(spark, path: str):
     columns = [f.name for f in out_type.fields]
     ship_module(spark, sys.modules[__name__])
 
-    # The closure must reference ONLY stdlib/pandas plus plain data: any
-    # reference to this module's globals would make cloudpickle serialize a
-    # module pointer the executor workers cannot import (driver-only
-    # sys.path). Codec functions are imported inside, from the package if
-    # importable, else from the flat module ``ship_module`` shipped.
+    # The closure must reference ONLY stdlib/pandas, plain data and
+    # functions cloudpickle pickles by value (``forget_zip_importers``):
+    # any reference to this module's globals would make cloudpickle
+    # serialize a module pointer the executor workers cannot import
+    # (driver-only sys.path). Codec functions are imported inside, from the
+    # package if importable, else from the flat module ``ship_module``
+    # shipped.
     def decode_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
 
@@ -566,9 +568,11 @@ def read_avro(spark, path: str):
             from avro_py import decode_container as _dec  # shipped by ship_module
 
         for pdf in batches:
+            forget_zip_importers()  # see ext.multimodal.map_rows
             for blob in pdf["content"]:
                 _, records = _dec(bytes(blob))
                 yield _pd.DataFrame.from_records(records, columns=columns)
+        forget_zip_importers()
 
     binary = (
         spark.read.format("binaryFile")
@@ -591,7 +595,10 @@ def write_avro(df, path: str, codec: str = "deflate") -> int:
     columns = [f.name for f in df.schema.fields]
     os.makedirs(path, exist_ok=True)
     run_tag = uuid.uuid4().hex[:12]
-    from glue_etl_framework_spark.session import ship_module  # see read_avro
+    from glue_etl_framework_spark.session import (  # see read_avro
+        forget_zip_importers,
+        ship_module,
+    )
 
     ship_module(df.sparkSession, sys.modules[__name__])
 
@@ -605,6 +612,7 @@ def write_avro(df, path: str, codec: str = "deflate") -> int:
             from avro_py import encode_container as _enc  # shipped by ship_module
 
         records = [dict(zip(columns, row)) for row in rows]
+        forget_zip_importers()  # see ext.multimodal.map_rows
         if not records:
             return
         blob = _enc(schema, records, codec=codec)

@@ -106,19 +106,50 @@ SHINGLE_REGEX = r"regexp_extract_all(text, '(?<=^| )(?=((\\S+ ){2}\\S+))', 1)"
 SHINGLE_DF_CAP = 8192
 
 
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-3-gram shingles per document. Overlapping 3-grams come
-    from ONE regex pass (token-start lookbehind + lookahead capture) —
-    measured 3.6x faster at sf0.1 than split + sequence + slice +
-    array_join, which allocates four intermediate arrays per row. Produces
-    the IDENTICAL shingle set as the split-based formulation (which the
-    DuckDB oracle keeps, since RE2 lacks lookaround) for any token content,
+def _shingles(spark: SparkSession, sf_dir: str, shuffle_docs: bool = True) -> DataFrame:
+    """Distinct word-3-gram shingles per document, as ``(doc_id, shingle)``.
+
+    Partitioning rule (``shuffle_docs=True``): the documents are
+    hash-partitioned on ``doc_id`` BEFORE the shingle explode, into
+    ``defaultParallelism`` partitions and never fewer than the documents
+    scan already has. Every shingle of a document then lands in its
+    document's partition, so the distinct, and a ``doc_id``-keyed aggregate
+    planned directly on top (a localCheckpoint in between drops the
+    partitioning), needs no exchange of its own; the one shuffle moves
+    documents instead of their ~n_words shingles, and the regex stage runs
+    one task per core however few input splits the corpus has. The
+    partition count is fixed (a repartition by number), so AQE cannot
+    coalesce it back to one task; ``defaultParallelism`` rather than
+    ``spark.sql.shuffle.partitions`` keeps it at the core count when the
+    shuffle setting is in the hundreds.
+
+    ``shuffle_docs=False`` explodes on the scan's partitions and shuffles
+    the shingles in the distinct's exchange. Where a plan reads the
+    shingle set in several consumers without a checkpoint, AQE reuses that
+    exchange, so the regex (and a duplicate-insensitive aggregate the
+    optimizer folds into it, such as the MinHash minimums) runs once;
+    above a shared document shuffle every consumer re-runs it, one task
+    per core. Each caller's form was measured at shuffle 8 and 200 on
+    sf0.1, and the split form is kept where the document shuffle was slower
+    beyond noise: dedup_minhash_lsh (2 regex passes instead of 1 in the
+    AQE-final plan) and dedup_prefix_filter_jaccard (6 instead of 2).
+    similarity_tfidf_shingle_cosine runs 5 instead of 3 and still gains.
+
+    Precondition: one document per ``doc_id`` — two documents sharing one
+    are merged into one shingle set (pinned by
+    tests/test_doc_id_precondition.py).
+
+    Overlapping 3-grams come from ONE regex pass (token-start lookbehind +
+    lookahead capture) instead of split + sequence + slice + array_join,
+    which allocates four intermediate arrays per row. It produces the
+    IDENTICAL shingle set as the split-based formulation (which the DuckDB
+    oracle keeps, since RE2 lacks lookaround) for any token content,
     including punctuation-leading and pure-punctuation tokens."""
-    d = t(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
-        .distinct()
-    )
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
+    if shuffle_docs:
+        n = max(spark.sparkContext.defaultParallelism, d.rdd.getNumPartitions())
+        d = d.repartition(n, "doc_id")
+    return d.select("doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle")).distinct()
 
 
 @register(
@@ -228,7 +259,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is property-tested in tests/ against exact Jaccard. Signatures come
     from two md5 digests chunked into 32-bit pieces (see _minhash_sig_sql)
     so the per-shingle hashing cost is 2 digests, not 8."""
-    return _minhash_candidates(_shingles(spark, sf_dir))
+    return _minhash_candidates(_shingles(spark, sf_dir, shuffle_docs=False))
 
 
 def _minhash_candidates(
@@ -467,27 +498,29 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     with dedup_ngram_jaccard's exact measure (precision) — the output has
     NO false positives and exactly the LSH candidate recall.
 
-    The shingle set feeds FOUR consumers (signatures, both verify sides,
-    sizes); an eager localCheckpoint materializes it once so the
-    scan+regex-explode+distinct chain doesn't run four times (Catalyst
-    plans the four subtrees independently — no automatic exchange reuse
-    across differently-keyed downstream joins; eager, because concurrent
-    first-materialization of a lazy checkpoint races block registration).
-    30% faster at sf0.1 (2.1s -> 1.5s). DATA_SIZED: the shingle stream is
-    input-proportional — audited size class, level parameterized (ckpt policy).
+    Plan shape: ``_shingles`` hash-partitions the documents on doc_id into
+    one partition per core (never fewer than the scan's) before the regex
+    explode, so the shingling and its distinct run one task per core with
+    no (doc_id, shingle) exchange. The shingle set feeds four consumers
+    (signatures, both verify sides, sizes), so an eager localCheckpoint
+    materializes it once: Catalyst plans the four subtrees independently
+    and shares no exchange across the differently-keyed joins (eager,
+    because concurrent first-materialization of a lazy checkpoint races
+    block registration). The signature aggregate and the per-doc shingle
+    count are one fused groupBy (min-signatures and count are both
+    partial-aggregable), so the md5 work runs map-side, one task per
+    checkpoint partition, and the stream is exchanged on doc_id once;
+    sizes project off the fused frame. That frame is checkpointed too:
+    without it, column pruning splits the aggregate back per consumer (the
+    bands branch keeps s0..s7, the sizes branch keeps only n) and the
+    exchanges stop matching. Both checkpoints are DATA_SIZED (the
+    shingle stream is input-proportional; the per-doc frame is one narrow
+    row per doc, ~80 B), with the level from the ckpt policy.
 
-    r16 (guide §2.3 "aggregate before you shuffle", §2.4): the signature
-    aggregate and the per-doc size aggregate were two independent full
-    passes over the checkpointed shingle stream, each with its own doc_id
-    exchange. They now FUSE into one groupBy (min-signatures + count are
-    both partial-aggregable), so the stream is map-scanned and exchanged
-    once; sizes project off the fused frame. Same values by construction
-    (each doc's rows all reach the one aggregate). The fused frame is
-    itself checkpointed: without that, column pruning splits the
-    aggregate back per consumer (the bands branch keeps s0..s7, the sizes
-    branch keeps only n) and the exchanges stop matching — the exact
-    non-reuse the fusion exists to fix. One narrow row per doc
-    (DATA_SIZED, ~80 B/doc)."""
+    Precondition: one document per doc_id. Documents sharing a doc_id are
+    merged into one shingle set, exactly as the oracle's
+    ``SELECT DISTINCT doc_id, shingle`` merges them (pinned by
+    tests/test_doc_id_precondition.py)."""
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     sh = checkpoint_shared(_shingles(spark, sf_dir), size_class=DATA_SIZED)
@@ -970,7 +1003,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated subtrees are exchange-identical."""
     from pyspark.sql import Window as W
 
-    sh = _shingles(spark, sf_dir).select(
+    sh = _shingles(spark, sf_dir, shuffle_docs=False).select(
         "doc_id", F.xxhash64("shingle").alias("shingle")
     )
     # Global document frequency per shingle: the ordering key of the

@@ -393,8 +393,9 @@ def multimodal_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one Arrow-batched kernel pass, no shuffle at all —
     decode parallelism is partition parallelism, memory bounded by
     arrow batch size x blob size (the ext/multimodal contract). The
-    kernel imports codecs from the addPyFile-shipped flat module, so it
-    deserializes on vanilla-session executors (avro_py playbook)."""
+    kernel runs through ``ext.multimodal.map_rows``, which ships the codec
+    with ``session.ship_module`` and imports it from the package or, on a
+    worker that cannot import the package, from the shipped flat module."""
 
     def per_doc(doc_id, mc):
         dig = hashlib.md5(str(doc_id).encode()).digest()
@@ -830,9 +831,10 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker layout, stuffing, restarts, rejection) lives in
     tests/test_jpeg_py.py.
 
-    Scale shape: one Arrow-batched no-shuffle kernel pass like the
-    BMP/WAV entries; the kernel imports the addPyFile-shipped flat
-    module so it deserializes on vanilla-session executors."""
+    Scale shape: one Arrow-batched kernel pass through
+    ``ext.multimodal.map_rows`` (codec shipped and imported as for the BMP
+    entry), after a round-robin repartition of the doc ids into one
+    partition per core."""
 
     # quality-85 DC quantizer steps, computed on the driver like the oracle
     ql = int(_quality_scale(QTAB_LUMA, 85)[0])

@@ -224,6 +224,32 @@ def ship_module(spark: SparkSession, module: ModuleType) -> None:
     _SHIPPED.add(key)
 
 
+def _zip_importer_pruner():
+    def forget_zip_importers() -> None:
+        """Drop the ``zipimport.zipimporter`` entries from
+        ``sys.path_importer_cache``. A Python worker calls
+        ``importlib.invalidate_caches()`` at the start of every task, and on
+        CPython 3.11/3.12 each cached zipimporter then re-parses its whole
+        archive (pyspark.zip, the py4j zip, the spark-core jar and one entry
+        per imported subpackage: ~0.2 s a task on a 4-vCPU VM); 3.13 made
+        that lazy. A later import from an archive rebuilds its entry from
+        ``zipimport``'s directory cache without re-reading the file."""
+        import sys
+        import zipimport
+
+        cache = sys.path_importer_cache
+        for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+            del cache[path]
+
+    return forget_zip_importers
+
+
+# Built inside a function so cloudpickle pickles it by value into kernel
+# closures: a worker that cannot import this package could not load a
+# by-reference function.
+forget_zip_importers = _zip_importer_pruner()
+
+
 # Spill headroom floor for pair-emitting aggregates: the r11 eleventh
 # probe's 100x simhash run filled the box's 252 GB disk with transient
 # shuffle spill (java.io.IOException: No space left on device) — for a
